@@ -108,7 +108,13 @@ private[graft] object Checkpoints {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or by
     * lifecycle-managing the directory). Both modes return the same
     * rows with the same truncated-plan shape (a LogicalRDD scan), so
-    * every consumer and PlanSpec pin is mode-agnostic. */
+    * every consumer and PlanSpec pin is mode-agnostic.
+    *
+    * The mode switch covers `lease` only. The CC kernels' intra-query
+    * checkpoints (`DedupCluster.checkpointedWithRdd` /
+    * `checkpointedWithMetric`, registered under the "cc" tag) stay
+    * local-only in `reliable` mode too, so a dd_cluster* query still
+    * fails on losing an executor that holds its round blocks. */
   def lease(tag: String, df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     releasePrior(tag, sc)

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.functions.{Conversions, ModbusDecode}
 import graft.ops.Maintenance
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** The reference daemon's acquire -> decode -> convert -> persist
   * dataflow (SURVEY.md §3) as ONE Structured Streaming pipeline.
@@ -79,48 +80,24 @@ object Ingest {
     * a transactional store via the same foreachBatch MERGE). */
   private val statusLock = new Object
 
-  /** Deterministic dense id assignment in `parameter` order, fully
-    * distributed: `repartitionByRange` orders partitions by parameter,
-    * a per-partition sort orders rows within them, and
-    * `RDD.zipWithIndex` turns that global order into a dense 0-based
-    * index with ONE extra count job (it is exactly the two-phase
-    * prefix sum — per-partition sizes, then offset per partition) —
-    * no driver materialization, no single-partition global window.
-    * Where range-partition bounds fall cannot change the ids: bounds
-    * move rows between partitions but never reorder the global
-    * parameter sequence the index enumerates. Row i gets
-    * `startId + 1 + i`. */
-  private def withAssignedIds(df: DataFrame, startId: Long): DataFrame = {
-    val spark = df.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType,
-        nullable = false) +: df.schema.fields.toSeq)
-    val ranged = df.repartitionByRange(col("parameter"))
-      .sortWithinPartitions("parameter")
-    val rdd = ranged.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((startId + 1 + i) +: r.toSeq)
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Merge status updates into the keyed status table on disk — every
-    * stage distributed (the table is bounded by parameter count ≈
-    * channel count, db_model.py:57-62, but a 10M-channel deployment
-    * must not funnel it through the driver; the only driver-side
-    * values are the 1-row max-id probe and the swap renames). The
-    * merged table is computed lazily OVER the directory it replaces,
-    * so the write lands aside and installs via the same two-rename +
-    * .bak swap as [[compactFact]] — the data is never deleted before
-    * its replacement is in place, and a swap that dies between
-    * renames is restored at the next merge's entry probe.
+  /** Merge status updates into the keyed status table on disk as ONE
+    * plan, written by its only action (the table is bounded by
+    * parameter count ≈ channel count, db_model.py:57-62). The merged
+    * table is computed lazily OVER the directory it replaces, so the
+    * write lands aside and installs via the same two-rename + .bak
+    * swap as [[compactFact]] — the data is never deleted before its
+    * replacement is in place, and a swap that dies between renames is
+    * restored at the next merge's entry probe.
     *
     * The persisted table carries the reference's surrogate `id`
     * (db_model.py:58 autoincrement PK): a parameter keeps its id
-    * across upserts; parameters seen for the first time take the next
-    * ids in parameter order ([[withAssignedIds]]), which makes
-    * replays deterministic. */
+    * across upserts; parameters without one take the next ids after
+    * the table's max, parameters already in the table first, each
+    * group in parameter order — which makes replays deterministic and
+    * backfills a table written by an id-less engine version (its ids
+    * read as null) before any new parameter. */
   def mergeStatus(spark: SparkSession, statusDir: String, updates: DataFrame): Unit = statusLock.synchronized {
-    // First-run absence is the ONLY condition that substitutes an empty
+    // First-run absence is the ONLY condition that leaves out the
     // current table — probed explicitly, so a genuine read failure
     // (corrupt file, FS error) propagates and the micro-batch retries
     // instead of silently truncating persisted status rows. The probe
@@ -132,45 +109,32 @@ object Ingest {
     // recover a swap that died between its two renames (data under
     // .bak, no statusDir) — same protocol as recoverFactDir
     if (!fs.exists(statusPath) && fs.exists(bak)) { fs.rename(bak, statusPath); () }
-    val withIdSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType,
-        nullable = false) +: updates.schema.fields.toSeq)
-    val currentFull =
-      if (fs.exists(statusPath)) {
-        // probe the on-disk schema: a statusDir written by an id-less
-        // engine version would read null ids through the non-nullable
-        // schema (getLong unboxes null to 0 — every legacy parameter
-        // would silently share id 0). Backfill deterministically in
-        // parameter order instead, mirroring first-run id assignment.
-        if (spark.read.parquet(statusDir).schema.fieldNames.contains("id"))
-          spark.read.schema(withIdSchema).parquet(statusDir)
-        else withAssignedIds(
-          spark.read.schema(updates.schema).parquet(statusDir), 0L)
-      }
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), withIdSchema)
+    val tableSchema = StructType(StructField("id", LongType) +: updates.schema.fields.toSeq)
+    val incoming = updates.withColumn("id", lit(null).cast(LongType)).withColumn("__src", lit(1))
+    val rows =
+      if (fs.exists(statusPath))
+        spark.read.schema(tableSchema).parquet(statusDir).withColumn("__src", lit(0))
+          .unionByName(incoming)
+      else incoming
+    val byParam = Window.partitionBy("parameter")
     // tie-break equal timestamps in favor of the incoming update so a
     // same-second replay/recompute resolves deterministically
-    val merged = Maintenance.upsert(
-        currentFull.drop("id").withColumn("__src", lit(0)),
-        updates.withColumn("__src", lit(1)),
-        Seq("parameter"), Seq(col("ts"), col("__src")))
-      .drop("__src")
-    val dataCols = updates.schema.fieldNames.toSeq
-    val outCols = (col("id") +: dataCols.map(col)): Seq[org.apache.spark.sql.Column]
-    val curIds = currentFull.select(col("parameter"), col("id"))
-    // the one driver-side scalar: the current max id (column-pruned
-    // 1-row aggregate, never the table)
-    val maxId = currentFull.agg(coalesce(max(col("id")), lit(0L)))
-      .head().getLong(0)
-    val kept = merged.join(curIds, Seq("parameter")).select(outCols: _*)
-    val fresh = withAssignedIds(
-      merged.join(curIds, Seq("parameter"), "left_anti"), maxId)
-      .select(outCols: _*)
-    // single output file (repartition, not coalesce — a barrier keeps
-    // the merge itself parallel): the status table is a control table
-    // read whole by monitors; revisit if parameter count outgrows one
-    // file
-    val out = kept.unionByName(fresh).repartition(1)
+    val latest = rows
+      .withColumn("id", max(col("id")).over(byParam))
+      .withColumn("__held", min(col("__src")).over(byParam))
+      .withColumn("__rn", row_number().over(
+        byParam.orderBy(col("ts").desc, col("__src").desc)))
+      .filter(col("__rn") === 1)
+    // bounded-global-window: one row per parameter (≈ channel count,
+    // db_model.py:57-62). It runs in one partition, so the table lands
+    // as a single file — a control table read whole by monitors. Rows
+    // without an id sort first, so their row numbers run 1..k
+    val idOrder = Window.orderBy(col("id").isNotNull, col("__held"), col("parameter"))
+    val maxId = max(col("id")).over(
+      idOrder.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val out = latest
+      .withColumn("id", coalesce(col("id"), coalesce(maxId, lit(0L)) + row_number().over(idOrder)))
+      .select((col("id") +: updates.columns.toSeq.map(col)): _*)
     val tmp = statusDir + ".tmp"
     out.write.mode("overwrite").parquet(tmp)
     fs.delete(bak, true)
@@ -469,11 +433,6 @@ object Ingest {
       .start()
   }
 
-  /** D9 as a scheduled compaction over the fact sink: keep the newest
-    * `history_len` samples per channel (from the channel dim), writing
-    * to a swap directory then renaming — idempotent and atomic at the
-    * directory level, the scale-out form of the reference's 15 s
-    * truncate sweep (daq-3i.py:173-216). */
   /** Crash recovery for [[compactFact]]'s directory swap: a swap that
     * died between its two renames leaves the data under .bak and no
     * factDir — restore it. MUST run before anything else writes into
@@ -488,6 +447,11 @@ object Ingest {
     if (!fs.exists(dst) && fs.exists(bak)) { fs.rename(bak, dst); () }
   }
 
+  /** D9 as a scheduled compaction over the fact sink: keep the newest
+    * `history_len` samples per channel (from the channel dim), writing
+    * to a swap directory then renaming — idempotent and atomic at the
+    * directory level, the scale-out form of the reference's 15 s
+    * truncate sweep (daq-3i.py:173-216). */
   def compactFact(
       spark: SparkSession,
       factDir: String,
@@ -578,7 +542,6 @@ object Ingest {
       factDir: String,
       channels: DataFrame,
       partCol: String = "day"): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
     recoverFactPartitions(spark, factDir)
     val fact = spark.read.parquet(factDir)
     val dataCols = fact.columns.filterNot(_ == partCol).map(col).toSeq

@@ -168,12 +168,30 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(got.toSeq == Seq((1L, "CHL: 1"), (2L, "CHL: 2"), (4L, "CHL: 3"), (3L, "daq-3i")))
   }
 
+  test("status merge restores a swap that died between its renames") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_status_swap").toString + "/status"
+    val b1 = Seq((1L, ts(10), BigDecimal(1)), (2L, ts(10), BigDecimal(2)))
+      .toDF("channel_id", "ts", "value")
+    Ingest.mergeStatus(spark, dir, Ingest.statusUpdates(b1, heartbeat = false))
+    // the swap moved statusDir aside, then died before installing .tmp
+    val (status, bak) = (new java.io.File(dir), new java.io.File(dir + ".bak"))
+    assert(status.renameTo(bak))
+    val b2 = Seq((3L, ts(20), BigDecimal(3))).toDF("channel_id", "ts", "value")
+    Ingest.mergeStatus(spark, dir, Ingest.statusUpdates(b2, heartbeat = false))
+    val got = spark.read.parquet(dir).select("id", "parameter", "ts").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2).getTime / 1000))
+      .sortBy(_._1)
+    assert(got.toSeq == Seq((1L, "CHL: 1", 10L), (2L, "CHL: 2", 10L), (3L, "CHL: 3", 20L)))
+    assert(!bak.exists())
+    assert(status.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+  }
+
   test("status upsert at 100k parameters: distributed merge, stable dense ids") {
     // the scale case the driver-collect implementation would have
-    // funneled through the driver: every stage here is a distributed
-    // plan (range-partitioned zipWithIndex id assignment, join-based
-    // id retention, write-aside swap) — the only driver-side values in
-    // mergeStatus are a 1-row max(id) probe and the rename calls
+    // funneled through the driver: mergeStatus is one window plan
+    // (per-parameter id retention, global max(id) + row_number for new
+    // ids) whose only action is its write, then the swap renames
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_status_100k").toString + "/status"
     def updates(n: Int, tsSec: Int, prefix: String = "P") =

@@ -6,6 +6,7 @@ For each query dir under outDir: load our parquet result, run the oracle
 SQL from oracle_sql.json in DuckDB over the sfDir tables, sort columns by
 name + rows by all columns, and compare exactly. Reports per-query
 PASS/FAIL with a diff preview, mirroring CORRECTNESS_r{N}.json strictness.
+Every oracle_sql.json key without an output dir is reported as FAIL.
 
 If [jsonOut] is given (or by default <verifyOutDir>/correctness_local.json),
 also writes the driver's per-query artifact shape:
@@ -87,6 +88,12 @@ def main(sf_dir, out_dir, json_out=None):
             print(f"PASS {name} ({len(g)} rows)")
             record(name, True, True, True)
             n_pass += 1
+    # a query that died in Verify leaves no output directory: it fails
+    # here instead of dropping out of the report
+    for name in sorted(set(oracles) - set(report)):
+        print(f"FAIL {name}: no engine output")
+        record(name, False, False, False, "no engine output")
+        n_fail += 1
     with open(json_out, "w") as f:
         json.dump(report, f, indent=1, sort_keys=True)
     print(f"== {n_pass} pass, {n_fail} fail == (json: {json_out})")
