@@ -105,10 +105,7 @@ object Ingest {
     // other than fs.defaultFS).
     val statusPath = new org.apache.hadoop.fs.Path(statusDir)
     val fs = statusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(statusDir + ".bak")
-    // recover a swap that died between its two renames (data under
-    // .bak, no statusDir) — same protocol as recoverFactDir
-    if (!fs.exists(statusPath) && fs.exists(bak)) { fs.rename(bak, statusPath); () }
+    restoreSwap(fs, statusPath)
     val tableSchema = StructType(StructField("id", LongType) +: updates.schema.fields.toSeq)
     val incoming = updates.withColumn("id", lit(null).cast(LongType)).withColumn("__src", lit(1))
     val rows =
@@ -137,15 +134,37 @@ object Ingest {
       .select((col("id") +: updates.columns.toSeq.map(col)): _*)
     val tmp = statusDir + ".tmp"
     out.write.mode("overwrite").parquet(tmp)
+    swapInto(fs, new org.apache.hadoop.fs.Path(tmp), statusPath, "mergeStatus")
+  }
+
+  /** Install the freshly written `tmp` as `dst` via a `.bak` hop: data
+    * is never deleted before its replacement is in place, and every
+    * rename result is checked, so a concurrent writer recreating the
+    * destination aborts the swap loudly (leaving .bak) instead of
+    * silently nesting directories. An absent `dst` (a first status
+    * write) skips the move-aside; an absent `tmp` fails the install and
+    * rolls back. Errors name `caller`. Crash recovery: [[restoreSwap]]. */
+  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
+      caller: String): Unit = {
+    val bak = new org.apache.hadoop.fs.Path(dst.toString + ".bak")
     fs.delete(bak, true)
-    if (fs.exists(statusPath) && !fs.rename(statusPath, bak))
-      throw new java.io.IOException(s"mergeStatus: cannot move $statusPath aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), statusPath)) {
-      fs.rename(bak, statusPath) // roll back
-      throw new java.io.IOException(s"mergeStatus: cannot install $tmp")
+    if (fs.exists(dst) && !fs.rename(dst, bak))
+      throw new java.io.IOException(s"$caller: cannot move $dst aside")
+    if (!fs.rename(tmp, dst)) {
+      fs.rename(bak, dst) // roll back
+      throw new java.io.IOException(s"$caller: cannot install $tmp")
     }
     fs.delete(bak, true)
     ()
+  }
+
+  /** Recover a [[swapInto]] that died between its two renames: the
+    * data is under `<dst>.bak` and `dst` is gone — restore it. */
+  private def restoreSwap(fs: org.apache.hadoop.fs.FileSystem,
+      dst: org.apache.hadoop.fs.Path): Unit = {
+    val bak = new org.apache.hadoop.fs.Path(dst.toString + ".bak")
+    if (!fs.exists(dst) && fs.exists(bak)) { fs.rename(bak, dst); () }
   }
 
   /** Land one micro-batch: fact append + status upsert. The fact write
@@ -414,20 +433,10 @@ object Ingest {
       .writeStream
       .trigger(Trigger.ProcessingTime(periodSec * 1000L))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val sp = batch.sparkSession
-          val ts = batch.agg(max(col("timestamp"))).head().getTimestamp(0)
-          val upd = sp.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row("daq-3i", 1, ts)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("parameter",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("status",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("ts",
-                org.apache.spark.sql.types.TimestampType))))
-          mergeStatus(sp, statusDir, upd)
-        }
+        if (!batch.isEmpty)
+          mergeStatus(batch.sparkSession, statusDir, batch.select(
+            lit("daq-3i").as("parameter"), lit(1).as("status"),
+            max(col("timestamp")).as("ts")))
         ()
       }
       .start()
@@ -442,9 +451,7 @@ object Ingest {
     * starting the stream. */
   def recoverFactDir(spark: SparkSession, factDir: String): Unit = {
     val dst = new org.apache.hadoop.fs.Path(factDir)
-    val bak = new org.apache.hadoop.fs.Path(factDir + ".bak")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(bak)) { fs.rename(bak, dst); () }
+    restoreSwap(dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
   }
 
   /** D9 as a scheduled compaction over the fact sink: keep the newest
@@ -475,25 +482,11 @@ object Ingest {
     // keep the batch-partitioned layout so post-compaction micro-batches
     // (batch=bN) coexist with the compacted base
     kept.write.mode("overwrite").parquet(s"$tmp/batch=compacted")
-    // swap via a .bak hop: data is never deleted before its
-    // replacement is in place; every rename result is checked so a
-    // concurrent writer recreating the destination aborts the swap
-    // loudly (leaving .bak) instead of silently nesting directories.
     // Not concurrency-safe with an ACTIVE ingest stream — run
     // compaction between micro-batches or with the stream stopped.
-    val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(factDir)
-    val bak = new org.apache.hadoop.fs.Path(factDir + ".bak")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(bak, true)
-    if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"compactFact: cannot move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      fs.rename(bak, dst) // roll back
-      throw new java.io.IOException(s"compactFact: cannot install $tmp")
-    }
-    fs.delete(bak, true)
-    ()
+    swapInto(dst.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(tmp), dst, "compactFact")
   }
 
   /** D9 retention over a DATE-PARTITIONED fact table carrying the

@@ -1,37 +1,71 @@
 package graft.tools
 
+import graft.model.Tables
 import graft.model.Tables.table
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonAST.{JInt, JObject}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods
 
-/** Scale-stress harness. Three modes:
+/** Scale-stress harness. Every mode runs on one core:
+  * [[amplifyDatabase]] builds the `copies`× replica (the only
+  * amplification), [[withMeter]] gives each measurement a fresh session
+  * with one task listener, and [[writeJson]] writes the artifact.
+  * Positional args follow the mode; `sfDir` defaults to sf0.1.
   *
-  *  - `full <sfDir> <copies> <outJson>` — runs EVERY `SparkEntry.queries`
-  *    entry twice, against the base corpus and against a `copies`×
-  *    amplified replica of the WHOLE database, and writes per-query
-  *    (time@1x, time@Nx, ratio) to `outJson`. The amplified database is
-  *    `copies` disjoint, FK-consistent replicas: every fact table's key
-  *    columns are shifted per copy so joins land exactly as at 1x, while
-  *    the dimension tables (region/nation) stay broadcast-small — which
-  *    is precisely the 100 TB shape (facts grow, dims don't). Documents
+  * Query sweeps — each query timed at 1x and at `copies`× (median of
+  * three warm runs), its [[invariants]] checked on both outputs:
+  *
+  *  - `full <sfDir> [10] [SCALE_r05.json] [subset]` — EVERY
+  *    `SparkEntry.queries` entry (or the comma-separated subset) over a
+  *    `copies`× replica of the WHOLE database: `copies` disjoint,
+  *    FK-consistent replicas — every fact table's key columns are
+  *    shifted per copy so joins land exactly as at 1x, while the
+  *    dimension tables (region/nation) stay broadcast-small, which is
+  *    precisely the 100 TB shape (facts grow, dims don't). Documents
   *    keep their text across copies, so the dedup family sees a
   *    duplicate-SATURATED corpus — its worst case (candidate volume
-  *    would grow copies² if any stage were pairwise-unbounded).
-  *    A query whose time grows super-linearly in `copies` (ratio well
-  *    above `copies`, beyond fixed-overhead noise) is a scale defect.
+  *    would grow copies² if any stage were pairwise-unbounded). A query
+  *    whose time grows super-linearly in `copies` (ratio well above
+  *    `copies`, beyond fixed-overhead noise) is a scale defect.
+  *  - `fulld` — `full` with DISTINCT-document amplification: each
+  *    copy's words carry a per-copy prefix, so copies share no shingles
+  *    and the near-dup pair graph is `copies` disjoint replicas of the
+  *    1x graph — the amplification that keeps the dedup family's
+  *    inherent output LINEAR in copies (verbatim copies saturate it
+  *    quadratically: every doc gains C(copies,2) true pairs, which
+  *    measures output writing, not operator scaling).
+  *  - the document families, `<sfDir> [100] [SCALE100<MODE>.json]`
+  *    over a documents-only amplification (verbatim text, ids shifted
+  *    — every selection bucket now holds `copies` exact-score twins per
+  *    1x doc, the worst tie density, and every n-gram count multiplies
+  *    by `copies` at constant vocabulary):
+  *    - `dsir` → t_dsir
+  *    - `curate` → t_select_excess t_sample_weighted t_batch_bylen
+  *      t_pack_curriculum t_pack_split t_select_quality
+  *      t_select_bydomain
+  *    - `classify` → t_classify_nb w_classify_nb
+  *    - `curatepipe` → pipe_curate, plus the survivor probe
+  *      ([[survivorProbe]])
+  *    - `batchshard [shards=8]` (4th arg) → w_batch_bylen
+  *      w_batch_bylen_sharded, plus the band probe ([[bandProbe]])
   *
-  *  - `dedup <sfDir> <copies>` — the round-4 dedup-family saturation
-  *    probes (uncollapsed candidate volumes vs the collapsed operators).
+  * Parameter probes — configurations no declared query expresses:
+  * `ann` (IVF at √N-scale nlist, PQ at the contract codebook),
+  * `semdedup` (SemDeDup at √N-scale nlist), `classifylife` (NB model
+  * edits vs retrain) and `joinskew` (plain vs bucketed interval join
+  * under one hot user) — see each method's doc.
   *
-  *  - `skew <sfDir> <variants>` — plants a HOT BAND: `variants` distinct
-  *    near-identical documents (~20% of the corpus) whose shingle sets
-  *    differ by one token, so every LSH band hashes them into the SAME
-  *    bucket. The candidate join then has one bucket holding ~20% of all
-  *    postings — the adversarial-skew case for the banded equi-joins.
-  *    Prints wall time plus the max/median TASK time of the run: AQE's
-  *    skew-join split (`spark.sql.adaptive.skewJoin`, on by default)
-  *    splits the oversized sort-merge partition across tasks, so the
-  *    hot bucket must NOT serialize into one straggler task.
+  * Stress runs that print instead of writing JSON: `skew <sfDir>
+  * [2500 variants]` ([[hotBand]]) and `dedup <sfDir> [20 copies]`
+  * ([[dedupSaturation]]).
+  *
+  * Materialization: `amp <sfDir> <copies> <outDir>` writes the `full`
+  * replica for ad-hoc profiling; `ampd` the `fulld` one (for
+  * core-count scale-out sweeps, where saturated duplicates would
+  * measure pair-output writing instead of operator scaling).
   *
   * Usage: sbt "runMain graft.tools.ScaleSmoke [mode] [sfDir] [n] [out]"
   *
@@ -40,1096 +74,139 @@ import org.apache.spark.sql.functions._
   * progressively (dd_cluster 3.9s at 8g -> 26s then 106s at 40g) — a
   * huge heap almost never GCs, so everything the ContextCleaner frees
   * only after a driver GC (shuffle state, broadcasts, checkpoint
-  * blocks) accumulates without bound. Same reason buildSession sets a
-  * short periodic-GC interval.
+  * blocks) accumulates without bound. Same reason Tables.buildLocalSession
+  * sets a short periodic-GC interval.
   */
 object ScaleSmoke {
 
-  // shared with Bench/Verify — see Tables.buildLocalSession's doc for
-  // why the periodicGC pin and fresh-session discipline live THERE
-  private def buildSession(): SparkSession =
-    graft.model.Tables.buildLocalSession()
+  /** Per-copy key shift; every replica's ids stay disjoint. */
+  private val Offset = 1000000000L
+
+  /** A query-subset family of the `full` sweep; `probe` adds the
+    * fields of its cross-output invariants (base args, amplified dir). */
+  private final case class Family(mode: String, queries: Seq[String],
+      probe: (Args, String) => JObject = (_, _) => JObject())
+
+  private val families = Seq(
+    Family("dsir", Seq("t_dsir")),
+    Family("curate", Seq("t_select_excess", "t_sample_weighted",
+      "t_batch_bylen", "t_pack_curriculum", "t_pack_split",
+      "t_select_quality", "t_select_bydomain")),
+    Family("classify", Seq("t_classify_nb", "w_classify_nb")),
+    Family("batchshard", Seq("w_batch_bylen", "w_batch_bylen_sharded"), bandProbe),
+    Family("curatepipe", Seq("pipe_curate"), survivorProbe))
+
+  /** The default artifact name of a 100× mode. */
+  private def defaultOut(mode: String): String = s"SCALE100${mode.toUpperCase}.json"
+
+  private val modes = Seq[(String, Array[String] => Unit)](
+    "full" -> (a => fullSet(a)),
+    "fulld" -> (a => fullSet(a, distinctDocs = true)),
+    "amp" -> (a => withMeter(m => amplifyDatabase(m.spark, a(0), a(2), a(1).toInt))),
+    "ampd" -> (a => withMeter(m =>
+      amplifyDatabase(m.spark, a(0), a(2), a(1).toInt, distinctDocs = true))),
+    "skew" -> hotBand,
+    "dedup" -> dedupSaturation,
+    "ann" -> annScale,
+    "semdedup" -> semDedupScale,
+    "joinskew" -> joinSkew,
+    "classifylife" -> classifyLifeScale) ++
+    families.map(f => f.mode -> ((a: Array[String]) => familyScale(f, a)))
 
   def main(args: Array[String]): Unit = {
-    args.headOption.getOrElse("dedup") match {
-      case "full"  => fullSet(args.drop(1))
-      // `fulld` = full with DISTINCT-document amplification: each
-      // copy's words carry a per-copy prefix, so copies share no
-      // shingles and the near-dup pair graph is `copies` disjoint
-      // replicas of the 1x graph — the amplification that keeps the
-      // dedup family's inherent output LINEAR in copies (verbatim
-      // text copies saturate it quadratically: every doc gains
-      // C(copies,2) true pairs, which measures output writing, not
-      // operator scaling)
-      case "fulld" => fullSet(args.drop(1), distinctDocs = true)
-      case "amp"   => // materialize an amplified dir for ad-hoc profiling
-        val spark = buildSession()
-        try amplifyDatabase(spark, args(1), args(3), args(2).toInt)
-        finally spark.stop()
-      case "ampd"  => // amp with DISTINCT documents (the linear-dedup
-        // amplification `fulld` uses) — for core-count scale-out
-        // sweeps, where saturated duplicates would measure pair-output
-        // writing instead of operator scaling
-        val spark = buildSession()
-        try amplifyDatabase(spark, args(1), args(3), args(2).toInt,
-          distinctDocs = true)
-        finally spark.stop()
-      case "skew"  => hotBand(args.drop(1))
-      case "dedup" => dedupSaturation(args.drop(1))
-      case "ann"   => annScale(args.drop(1))
-      case "semdedup" => semDedupScale(args.drop(1))
-      case "joinskew" => joinSkew(args.drop(1))
-      case "dsir"  => dsirScale(args.drop(1))
-      case "curate" => curateScale(args.drop(1))
-      case "classify" => classifyScale(args.drop(1))
-      case "batchshard" => batchShardScale(args.drop(1))
-      case "curatepipe" => curatePipeScale(args.drop(1))
-      case "classifylife" => classifyLifeScale(args.drop(1))
-      case other   => sys.error(s"unknown mode '$other' (full|fulld|dedup|skew|ann|semdedup|joinskew|dsir|curate|classify|batchshard|curatepipe|classifylife)")
-    }
+    val mode = args.headOption.getOrElse("dedup")
+    modes.collectFirst { case (`mode`, run) => run }
+      .getOrElse(sys.error(
+        s"unknown mode '$mode' (${modes.map(_._1).mkString("|")})"))
+      .apply(args.drop(1))
   }
 
-  /** `ann <sfDir> <copies> <outJson>` — the scaled-parameter honesty
-    * pass on the IVF family: the oracle-pinned queries run nlist = 10
-    * (tiny by design — the DuckDB replay unrolls training), but the
-    * 100 TB design claim is nlist ≈ √N. This mode amplifies the
-    * embeddings table `copies`× (id-shifted, verbatim vectors — the
-    * point is shape and cost, not recall, which SimilaritySpec pins at
-    * real data scale) and measures the full build+serve ivfTopK at the
-    * contract config AND at √N-scale cell counts, with nprobe held to
-    * a comparable probed fraction. What must hold for the design claim:
-    * the centroid side stays broadcast-small (nlist × dim doubles),
-    * the per-round assignment stays one map pass + one tiny aggregate,
-    * serving cost FALLS as nlist grows (nprobe/nlist of the corpus is
-    * scanned), and no cell degenerates into a straggler (cell-balance
-    * stats are emitted alongside). PQ serves from a codebook whose
-    * size is m × ksub × dsub — dimension-bound, INDEPENDENT of N — so
-    * its honesty number here is just the 100× build+serve time at the
-    * contract codebook. */
-  /** `dsir <sfDir> <copies> <outJson>` — the 100× pass on t_dsir's
-    * bucketed two-phase selection (the round-15 verdict's missing
-    * artifact: its predecessor was an unpartitioned global window —
-    * a single-task sort of the whole per-doc frame — and this mode
-    * exists to show the [[graft.ops.Selection]] rewrite scales).
-    * Amplifies documents `copies`× with VERBATIM text (ids shifted):
-    * the ratio-model table stays `buckets` rows regardless, feature
-    * volume grows linearly, and — the adversarial part — every
-    * selection-order bucket now holds `copies` exact-tie rows per 1×
-    * doc, the worst tie-density the bucketed rank can see (ties
-    * concentrate in the per-bucket LOCAL sorts, which must stay
-    * parallel across buckets). What must hold: wall ratio ≲ copies
-    * (linear work, no quadratic or single-task stage), no straggler
-    * task dominating the run, and the selected fraction still exactly
-    * ceil(0.25·n). */
-  def dsirScale(args: Array[String]): Unit = {
+  /** `<sfDir> <n> <out> [rest...]` with the mode's defaults. */
+  private final case class Args(sfDir: String, n: Int, out: String,
+      rest: Seq[String])
+
+  private def parse(args: Array[String], n: Int, out: String = ""): Args = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100DSIR.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_dsamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE dsir: ${copies}x documents at $ampDir")
-
-    def run(dir: String): (Double, Double, Long, Long) = {
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        import spark.implicits._
-        spark.range(1000).selectExpr("sum(id)").collect()
-        var rows = 0L
-        var selected = 0L
-        def force(): Double = {
-          val t0 = System.nanoTime()
-          val out = graft.ops.Dsir.dsirWeights(
-            table(spark, dir, "documents"), $"doc_id", $"text",
-            $"lang" === "en")
-          val agg = out.agg(count(lit(1)),
-            sum(when($"selected", 1L).otherwise(0L))).head()
-          rows = agg.getLong(0); selected = agg.getLong(1)
-          (System.nanoTime() - t0) / 1e9
-        }
-        force() // codegen warmup
-        durations.clear()
-        val t = force()
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        println(f"SCALE dsir $dir: $t%.2f s " +
-          f"(straggler ${maxTask / math.max(t, 1e-9)}%.2f, rows $rows%d, selected $selected%d)")
-        (t, maxTask / math.max(t, 1e-9), rows, selected)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
-
-    val (t1, st1, rows1, sel1) = run(sfDir)
-    val (tN, stN, rowsN, selN) = run(ampDir)
-    require(selN == math.ceil(rowsN * 0.25).toLong,
-      s"selected $selN != ceil(0.25 * $rowsN) at ${copies}x")
-    val json =
-      f"""{
-  "mode": "dsir_bucketed_selection", "copies": $copies%d,
-  "t1": $t1%.3f, "tN": $tN%.3f, "ratio": ${tN / math.max(t1, 1e-9)}%.2f,
-  "straggler_1x": $st1%.2f, "straggler_Nx": $stN%.2f,
-  "rows_1x": $rows1%d, "rows_Nx": $rowsN%d,
-  "selected_1x": $sel1%d, "selected_Nx": $selN%d
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE dsir wrote $outJson")
+    Args(sfDir, args.lift(1).fold(n)(_.toInt), args.lift(2).getOrElse(out),
+      args.drop(3).toSeq)
   }
 
-  /** `curate <sfDir> <copies> <outJson>` — the 100× pass on the
-    * round-16 selection/curation additions, all riding the
-    * [[graft.ops.Selection]] bucketed two-phase primitive: RHO-style
-    * excess selection (t_select_excess — the heaviest: two bigram
-    * count models + the bucketed rank), systematic weighted sampling
-    * (t_sample_weighted), length-banded batching (t_batch_bylen),
-    * curriculum packing (t_pack_curriculum), exact-budget segment
-    * packing (t_pack_split — shard tiling require()d at both scales),
-    * corpus-relative quality selection (t_select_quality —
-    * exact-count selection require()d), and per-domain selection
-    * (t_select_bydomain — the GROUPED primitive, every source
-    * require()d to select exactly ceil(0.25·its size)). Amplifies
-    * documents
-    * `copies`× with VERBATIM text (ids shifted) — for the
-    * quality/excess-quantized buckets that is the worst tie density
-    * (every 1× doc now has `copies` exact-score twins per bucket),
-    * and for the count models it multiplies every n-gram count by
-    * `copies` at constant vocabulary. What must hold per op: wall
-    * ratio ≲ copies, no dominant straggler task, and the semantic
-    * invariants (excess selects exactly ceil(0.25·n); the sample
-    * stays ≤ m; every batch stays ≤ batchSize). */
-  def curateScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100CURATE.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_curamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE curate: ${copies}x documents at $ampDir")
+  // ---- measurement core --------------------------------------------
 
-    // per-dir measurement: each op timed on its own forcing aggregate,
-    // straggler = max task duration / op wall (same listener protocol
-    // as dsirScale)
-    def run(dir: String): Map[String, (Double, Double, Long)] = {
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        import spark.implicits._
-        spark.range(1000).selectExpr("sum(id)").collect()
-        def docs = table(spark, dir, "documents")
-        def timeOp(body: => Long): (Double, Double, Long) = {
-          body // codegen warmup
-          durations.clear()
-          val t0 = System.nanoTime()
-          val stat = body
-          val t = (System.nanoTime() - t0) / 1e9
-          val maxTask = { import scala.jdk.CollectionConverters._
-            durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-          (t, maxTask / math.max(t, 1e-9), stat)
-        }
-        val excess = timeOp {
-          val a = graft.ops.LmScore.excessLmSelect(
-              docs, $"doc_id", $"text", $"lang" === "en")
-            .agg(count(lit(1)), sum(when($"selected", 1L).otherwise(0L))).head()
-          require(a.getLong(1) == math.ceil(a.getLong(0) * 0.25).toLong,
-            s"excess selected ${a.getLong(1)} != ceil(0.25 * ${a.getLong(0)})")
-          a.getLong(1)
-        }
-        val sample = timeOp {
-          val a = graft.ops.Curate.systematicSample(docs, $"doc_id", $"text", 200)
-            .agg(sum(when($"selected", 1L).otherwise(0L))).head()
-          require(a.getLong(0) > 0 && a.getLong(0) <= 200,
-            s"sample selected ${a.getLong(0)} not in (0, 200]")
-          a.getLong(0)
-        }
-        val bylen = timeOp {
-          val a = graft.ops.Curate.lengthBatches(docs, $"doc_id", $"text")
-            .groupBy($"len_band", $"batch").agg(count(lit(1)).as("n"))
-            .agg(max($"n"), count(lit(1))).head()
-          require(a.getLong(0) <= 32, s"batch of ${a.getLong(0)} > 32")
-          a.getLong(1)
-        }
-        val curr = timeOp {
-          graft.ops.TextAnalysis.packShardsCurriculum(
-              docs, $"doc_id", $"text", budget = 5000L)
-            .agg(count(lit(1)), max($"shard")).head().getLong(0)
-        }
-        val split = timeOp {
-          val a = graft.ops.Curate.packSegments(
-              docs, $"doc_id", $"text", budget = 5000L, bucketWidth = 100L)
-            .groupBy($"shard").agg(sum($"tok_len").as("n"))
-            .agg(count(lit(1)).as("shards"), max($"n").as("mx")).head()
-          require(a.getLong(1) <= 5000L, s"shard over budget: ${a.getLong(1)}")
-          a.getLong(0)
-        }
-        val selq = timeOp {
-          val q = docs
-            .withColumn("__toks", graft.ops.TextAnalysis.tokens($"text"))
-            .select($"doc_id",
-              graft.ops.TextAnalysis.qualityScoreOf($"text", $"__toks").as("quality"))
-          val a = graft.ops.Selection.topFracByOrder(q,
-              floor(-$"quality" * lit(1024.0)),
-              Seq($"quality".desc, $"doc_id".asc), 0.5, "selected")
-            .agg(count(lit(1)), sum(when($"selected", 1L).otherwise(0L))).head()
-          require(a.getLong(1) == math.ceil(a.getLong(0) * 0.5).toLong,
-            s"selected ${a.getLong(1)} != ceil(0.5 * ${a.getLong(0)})")
-          a.getLong(1)
-        }
-        val seldom = timeOp {
-          val q = docs
-            .withColumn("__toks", graft.ops.TextAnalysis.tokens($"text"))
-            .select($"doc_id", $"source",
-              graft.ops.TextAnalysis.qualityScoreOf($"text", $"__toks").as("quality"))
-          // exact per-GROUP counts: every source must select exactly
-          // ceil(0.25 * its own size) — the grouped primitive's claim
-          val bad = graft.ops.Selection.topFracByOrderPerGroup(q, $"source",
-              floor(-$"quality" * lit(1024.0)),
-              Seq($"quality".desc, $"doc_id".asc), 0.25, "selected")
-            .groupBy($"source")
-            .agg(count(lit(1)).as("n"),
-              sum(when($"selected", 1L).otherwise(0L)).as("sel"))
-            .filter($"sel" =!= ceil($"n" * 0.25).cast("long"))
-            .count()
-          require(bad == 0L, s"$bad sources with sel != ceil(0.25 * n)")
-          bad
-        }
-        Map("excess" -> excess, "sample" -> sample,
-          "bylen" -> bylen, "curriculum" -> curr,
-          "pack_split" -> split, "select_quality" -> selq,
-          "select_bydomain" -> seldom)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
+  /** One measurement: median wall over the timed runs, and the task
+    * durations of the LAST timed run — max, median, count, and the
+    * straggler fraction max-task / that run's wall (the skew witness:
+    * if a stage serialized its hot key into one task, it reads ≈ 1). */
+  private final case class Timing(wall: Double, straggler: Double,
+      maxTask: Double, medTask: Double, tasks: Int)
 
-    val r1 = run(sfDir)
-    val rN = run(ampDir)
-    val ops = Seq("excess", "sample", "bylen", "curriculum",
-      "pack_split", "select_quality", "select_bydomain")
-    val body = ops.map { op =>
-      val (t1, st1, s1) = r1(op)
-      val (tN, stN, sN) = rN(op)
-      println(f"SCALE curate $op: $t1%.2f s -> $tN%.2f s " +
-        f"(ratio ${tN / math.max(t1, 1e-9)}%.2f, straggler $st1%.2f -> $stN%.2f)")
-      f""""$op": {"t1": $t1%.3f, "tN": $tN%.3f, "ratio": ${tN / math.max(t1, 1e-9)}%.2f,
-    "straggler_1x": $st1%.2f, "straggler_Nx": $stN%.2f, "stat_1x": $s1%d, "stat_Nx": $sN%d}"""
-    }.mkString(",\n  ")
-    val json =
-      s"""{
-  "mode": "curate_selection_family", "copies": $copies,
-  $body
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE curate wrote $outJson")
-  }
-
-  /** `classify <sfDir> <copies> <outJson>` — the 100× pass on the
-    * trained-NB family: t_classify_nb (column-algebra training +
-    * scoring, one tokenize lease) and the model-collect + frozen-serve
-    * path behind w_classify_nb. Amplifies documents `copies`× with
-    * VERBATIM text (ids shifted): every count multiplies by `copies`
-    * at CONSTANT vocabulary — the count tables and the broadcast
-    * artifact stay the same size, only the scoring pass grows
-    * linearly, which is exactly the claim to verify. The class priors
-    * are scale-invariant by construction (bits(100a, 100b) =
-    * bits(a, b) exactly); per-token bits shift by at most the +1
-    * smoothing's dilution, so prediction agreement on the original id
-    * slice is REPORTED as a stat (not required — the smoothing shift
-    * is real arithmetic, not noise). */
-  /** `batchshard <sfDir> <copies> <outJson> <shards>` — the online
-    * batcher's throughput ceiling and its sharding relief, measured:
-    * the exact-per-band form (`shards = 1`, w_batch_bylen's semantic)
-    * numbers each band serially — under batch replay one task drains
-    * one band, so wall time is bounded below by the LARGEST band no
-    * matter how many cores idle. The sharded form keys state by
-    * (band, hash-shard), cutting the serial unit ~1/shards at the cost
-    * of per-shard (not per-band) numbering. This probe amplifies
-    * documents `copies`×, runs both forms, and emits wall times, the
-    * straggler fraction (max task / wall — ~1.0 IS the expected
-    * signature of the serial form), the largest serial unit each form
-    * drains, and exactness invariants (row conservation; every
-    * (band[, shard]) key's max batch == (n-1) div 32; per-band
-    * totals identical across forms — sharding must never move a doc
-    * across bands). */
-  /** `classifylife <sfDir> <copies> <outJson>` — the 100× pass on the
-    * NB classifier's OPERATIONAL closure (the round-17 stored/add/
-    * takedown + hashed-feature work): on the 1× and the `copies`×
-    * (verbatim-copy) corpus, measure the lifecycle costs and check
-    * the claims that justify them at 100 TB:
-    *
-    *  - build + store: the one-time cost (grows with the corpus —
-    *    that's fine, it is paid once);
-    *  - hashed build: the bucket-bounded artifact — the model's key
-    *    count must stay ≤ HashedFeatureBuckets at BOTH scales
-    *    (require()d), the property that makes the serving broadcast
-    *    safe at any corpus size;
-    *  - add: folding a FIXED 30-doc batch into the stored count
-    *    frames (union + group-sum + save). The stored frame is
-    *    VOCABULARY-sized, not corpus-sized — verbatim copies keep the
-    *    vocabulary constant (require()d equal across scales) — so the
-    *    edit cost must stay roughly flat while the corpus grows 100×;
-    *  - takedown: subtracting FIXED tombstones (docs 100-199) from
-    *    the live frames — same flat-cost argument, and the edited
-    *    model must be EXACTLY the retrain on (corpus + batch −
-    *    tombstones), field-for-field and count-for-count (require()d
-    *    at both scales: the additivity proof, executed);
-    *  - retrain: the full-rebuild baseline the edits avoid —
-    *    `edit_vs_retrain_Nx` is the measured win.
-    */
-  def classifyLifeScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100CLASSIFYLIFE.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_cllamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE classifylife: ${copies}x documents at $ampDir")
-
-    def modelEq(a: graft.streaming.NbModel, b: graft.streaming.NbModel): Boolean =
-      a.classes.sameElements(b.classes) &&
-        a.priorBits.sameElements(b.priorBits) &&
-        a.dd.sameElements(b.dd) &&
-        a.counts.keySet == b.counts.keySet &&
-        a.counts.forall { case (w, arr) => arr.sameElements(b.counts(w)) }
-
-    val seq = new java.util.concurrent.atomic.AtomicLong()
-    def run(dir: String): (Map[String, Double], Long, Long) = {
-      val spark = buildSession()
-      try {
-        import spark.implicits._
-        import graft.streaming.ClassifyServe
-        import graft.ops.IndexStore
-        spark.range(1000).selectExpr("sum(id)").collect()
-        def docs = table(spark, dir, "documents")
-        def time[T](body: => T): (Double, T) = {
-          val t0 = System.nanoTime(); val r = body
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
-        val root = IndexStore.scratchRoot(spark, "nblife", seq.incrementAndGet())
-        val (tBuild, vocab) = time {
-          val (cls, cnt) = ClassifyServe.nbCountFrames(docs, $"text", $"lang")
-          IndexStore.save(root, "nb_classes" -> cls, "nb_counts" -> cnt)
-          ClassifyServe.nbModelFromFrames(
-            IndexStore.load(spark, root, "nb_classes"),
-            IndexStore.load(spark, root, "nb_counts")).counts.size.toLong
-        }
-        val (tHash, hkeys) = time {
-          val (clsH, cntH) = ClassifyServe.nbCountFrames(docs, $"text", $"lang",
-            featOf = graft.ops.Classify.hashedFeat)
-          ClassifyServe.nbModelFromFrames(clsH, cntH,
-            Some(graft.ops.Classify.HashedFeatureBuckets)).counts.size.toLong
-        }
-        require(hkeys <= graft.ops.Classify.HashedFeatureBuckets,
-          s"hashed model $hkeys keys > bucket bound")
-        def batch = docs.filter($"doc_id" < 30)
-          .select(($"doc_id" + 2000000L).as("doc_id"), $"lang",
-            substring($"text", 1, 40).as("text"))
-        val (tAdd, _) = time {
-          val (clsB, cntB) = ClassifyServe.nbCountFrames(batch, $"text", $"lang")
-          val clsLive = IndexStore.load(spark, root, "nb_classes")
-            .unionByName(clsB)
-            .groupBy($"lab").agg(
-              sum($"n_docs_s").as("n_docs_s"), sum($"n_toks_s").as("n_toks_s"))
-          val cntLive = IndexStore.load(spark, root, "nb_counts")
-            .unionByName(cntB)
-            .groupBy($"w", $"lab").agg(sum($"cws").as("cws"))
-          IndexStore.save(root, "nb_classes" -> clsLive, "nb_counts" -> cntLive)
-        }
-        val (tTake, _) = time {
-          val (clsT, cntT) = ClassifyServe.nbCountFrames(
-            docs.filter($"doc_id" >= 100 && $"doc_id" < 200), $"text", $"lang")
-          val clsLive = IndexStore.load(spark, root, "nb_classes")
-            .join(clsT.select($"lab", $"n_docs_s".as("__d"), $"n_toks_s".as("__t")),
-              Seq("lab"), "left")
-            .select($"lab",
-              ($"n_docs_s" - coalesce($"__d", lit(0L))).as("n_docs_s"),
-              ($"n_toks_s" - coalesce($"__t", lit(0L))).as("n_toks_s"))
-            .filter($"n_docs_s" > 0)
-          val cntLive = IndexStore.load(spark, root, "nb_counts")
-            .join(cntT.select($"w", $"lab", $"cws".as("__c")), Seq("w", "lab"), "left")
-            .select($"w", $"lab", ($"cws" - coalesce($"__c", lit(0L))).as("cws"))
-            .filter($"cws" > 0)
-          IndexStore.save(root, "nb_classes" -> clsLive, "nb_counts" -> cntLive)
-        }
-        val (tRetrain, ok) = time {
-          val base = docs
-            .filter(!($"doc_id" >= 100 && $"doc_id" < 200))
-            .select($"doc_id", $"lang", $"text")
-            .unionByName(batch.select($"doc_id", $"lang", $"text"))
-          val mRe = ClassifyServe.buildNbModel(base, $"doc_id", $"text", $"lang")
-          val mEd = ClassifyServe.nbModelFromFrames(
-            IndexStore.load(spark, root, "nb_classes"),
-            IndexStore.load(spark, root, "nb_counts"))
-          modelEq(mEd, mRe)
-        }
-        require(ok, "edited frames != retrain on corpus + batch - tombstones")
-        (Map("build" -> tBuild, "hash_build" -> tHash, "add" -> tAdd,
-          "takedown" -> tTake, "retrain" -> tRetrain), vocab, hkeys)
-      } finally spark.stop()
-    }
-
-    val (m1, v1, h1) = run(sfDir)
-    val (mN, vN, hN) = run(ampDir)
-    require(v1 == vN,
-      s"vocabulary changed under verbatim copies: $v1 -> $vN")
-    val body = Seq("build", "hash_build", "add", "takedown", "retrain")
-      .map { k =>
-        println(f"SCALE classifylife $k: ${m1(k)}%.2f s -> ${mN(k)}%.2f s " +
-          f"(ratio ${mN(k) / math.max(m1(k), 1e-9)}%.2f)")
-        f""""$k": {"t1": ${m1(k)}%.3f, "tN": ${mN(k)}%.3f, "ratio": ${mN(k) / math.max(m1(k), 1e-9)}%.2f}"""
-      }.mkString(",\n  ")
-    val json =
-      f"""{
-  "mode": "classify_lifecycle", "copies": $copies%d,
-  $body,
-  "vocab": $v1%d, "hashed_keys_1x": $h1%d, "hashed_keys_Nx": $hN%d,
-  "edit_vs_retrain_Nx": ${mN("retrain") / math.max(mN("add") + mN("takedown"), 1e-9)}%.2f,
-  "model_surgery_exact": true,
-  "note": "the structural claims are the scale story here: count frames stay vocabulary-sized (vocab constant under verbatim copies, require()d), the hashed model stays bucket-bounded at both scales, and edited frames equal the retrain EXACTLY at both scales; at this fixture's corpus/vocabulary size every phase is scheduling-overhead-dominated, so ~1.0 ratios under 100x data mean no phase's cost grew with the corpus -- for add/takedown that flatness IS the claim (they scan only the delta + vocabulary-sized frames), while at production scale build/retrain would grow linearly and the edit forms would not"
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE classifylife wrote $outJson")
-  }
-
-  def batchShardScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100BATCHSHARD.json")
-    val shards = args.drop(3).headOption.map(_.toInt).getOrElse(8)
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_bsamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE batchshard: ${copies}x documents at $ampDir")
-
-    val spark = buildSession()
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+  /** A session with ONE task-duration listener. */
+  private final class Meter(val spark: SparkSession) {
+    private val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         durations.add(te.taskInfo.duration); ()
       }
+    })
+
+    /** `body` once untimed when `warm` (whole-stage codegen JIT
+      * compiles on first execution — identical plan at both scales, so
+      * neither side may pay it in the ratio), then `runs` timed runs.
+      * Returns the last run's value. */
+    def time[T](runs: Int = 1, warm: Boolean = true)(body: => T): (Timing, T) = {
+      if (warm) body
+      var last: T = null.asInstanceOf[T]
+      val walls = (1 to runs).map { i =>
+        if (i == runs) durations.clear()
+        val t0 = System.nanoTime()
+        last = body
+        (System.nanoTime() - t0) / 1e9
+      }
+      val ds = { import scala.jdk.CollectionConverters._
+        durations.iterator().asScala.toArray.sorted }
+      val (maxT, medT) =
+        if (ds.isEmpty) (0.0, 0.0) else (ds.last / 1e3, ds(ds.length / 2) / 1e3)
+      (Timing(walls.sorted.apply(runs / 2),
+        if (walls.last > 0) maxT / walls.last else 0.0, maxT, medT, ds.length),
+        last)
     }
-    spark.sparkContext.addSparkListener(listener)
+  }
+
+  /** Run `f` in a FRESH session: the amplify writes and any other
+    * measurement contribute zero session state — broadcast blocks,
+    * checkpoint blocks, shuffle tracking — to this one (a shared
+    * session measurably distorted repeat runs). One-time session costs
+    * are paid before `f`, outside every timed run (same as Bench). */
+  private def withMeter[T](f: Meter => T): T = {
+    // shared with Bench/Verify — see Tables.buildLocalSession's doc for
+    // why the periodicGC pin and fresh-session discipline live THERE
+    val spark = Tables.buildLocalSession()
     try {
-      import spark.implicits._
       spark.range(1000).selectExpr("sum(id)").collect()
-      def docs = table(spark, ampDir, "documents")
-
-      // invariants checked per run, Spark-side (nothing corpus-sized
-      // collects): rows in == rows out; each key's max batch ==
-      // (count - 1) div 32; per-band doc totals
-      def checkAndBands(out: DataFrame, keyCols: Seq[String]): Map[Long, Long] = {
-        val perKey = out.groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("n"), max(col("batch")).as("mb"))
-        val bad = perKey.filter(col("mb") =!= expr("(n - 1) div 32")).count()
-        require(bad == 0L, s"$bad keys with max batch != (n-1) div 32")
-        out.groupBy($"len_band").agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-
-      def run(sh: Int): (Double, Double, Long, Long, Map[Long, Long]) = {
-        def once() = graft.streaming.Batching.withOnlineBatchesSharded(
-          docs, $"doc_id", $"text", shards = sh).toDF()
-        once().count() // codegen + scan warmup
-        durations.clear()
-        val t0 = System.nanoTime()
-        val rows = once().count()
-        val t = (System.nanoTime() - t0) / 1e9
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        val bands = checkAndBands(once(), if (sh == 1) Seq("len_band")
-          else Seq("len_band", "shard"))
-        val serialUnit = bands.values.max / (if (sh == 1) 1L else sh.toLong)
-        (t, maxTask / math.max(t, 1e-9), rows, serialUnit, bands)
-      }
-
-      val (t1, st1, rows1, su1, bands1) = run(1)
-      val (tS, stS, rowsS, suS, bandsS) = run(shards)
-      require(rows1 == rowsS, s"row conservation broke: $rows1 != $rowsS")
-      require(bands1 == bandsS,
-        "sharding moved documents across bands — band membership must be invariant")
-      val json =
-        f"""{
-  "mode": "batchshard", "copies": $copies%d, "shards": $shards%d,
-  "rows": $rows1%d,
-  "t_serial": $t1%.3f, "t_sharded": $tS%.3f,
-  "speedup": ${t1 / math.max(tS, 1e-9)}%.2f,
-  "straggler_serial": $st1%.2f, "straggler_sharded": $stS%.2f,
-  "largest_band": ${bands1.values.max}%d,
-  "serial_unit_serial": $su1%d, "serial_unit_sharded_approx": $suS%d
-}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"SCALE batchshard wrote $outJson")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.stop()
-    }
+      f(new Meter(spark))
+    } finally spark.stop()
   }
 
-  /** `curatepipe <sfDir> <copies> <outJson>` — the composed curation
-    * pipeline (pipe_curate) at 100×: amplifies documents `copies`×
-    * with VERBATIM texts under shifted ids (the duplicate-saturated
-    * worst case for its dedup stage) and runs the whole five-stage
-    * composition at both scales.
-    *
-    * What is and is NOT scale-invariant here, measured and honest:
-    * keep-best ALWAYS returns originals (copy ids shift above every
-    * original, quality ties break to the lowest id — checked exactly,
-    * `all_originals`), and the per-run structural contracts hold at
-    * both scales (segment tiling exact, non-terminal shards at the
-    * exact budget, ≤ batchSize docs per batch, ≤ m sampled docs). But
-    * the top-half SELECTION CUT is a corpus-relative rank, and a rank
-    * cut through a TIED order-key group is inherently not
-    * copy-invariant: at 100× every tie multiplies 100×, so
-    * `ceil(N/2)` slices the boundary tie group differently, a
-    * boundary-sliver of documents swaps in/out, and every downstream
-    * running offset shifts — the same semantics-driven boundary
-    * behavior w_select_quality documents for its frozen threshold.
-    * The artifact therefore reports the output doc-set OVERLAP (must
-    * stay high — only the boundary sliver may move) instead of
-    * pretending bit-equality. */
-  def curatePipeScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100CURATEPIPE.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_cpamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE curatepipe: ${copies}x documents at $ampDir")
-
-    def run(dir: String): (Double, Double, Seq[Seq[Any]], Set[Long]) = {
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        graft.ops.Pipeline.pipeCurate(spark, dir).count() // codegen warmup
-        durations.clear()
-        val t0 = System.nanoTime()
-        val rows = graft.ops.Pipeline.pipeCurate(spark, dir)
-          .collect().map(_.toSeq.toSeq).toSeq
-        val t = (System.nanoTime() - t0) / 1e9
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        // per-run structural contracts (the PipelineSpec invariants,
-        // re-checked at scale): exact tiling, exact non-terminal shard
-        // budgets, batch-size bound, sample bound
-        val get = (r: Seq[Any], i: Int) => r(i).asInstanceOf[Long]
-        // columns: 0=doc_id 4=n_tokens 6=len_band 7=batch 9=shard
-        //          10=tok_start 11=tok_len
-        rows.groupBy(get(_, 0)).foreach { case (id, rs) =>
-          val srt = rs.sortBy(get(_, 9))
-          require(srt.map(get(_, 11)).sum == get(srt.head, 4),
-            s"doc $id: segment tiling broke")
-          require(get(srt.head, 10) == 0L, s"doc $id: first segment offset != 0")
-        }
-        val byShard = rows.groupBy(get(_, 9))
-          .map { case (s0, rs) => s0 -> rs.map(get(_, 11)).sum }
-        byShard.filter(_._1 != byShard.keys.max).foreach { case (s0, tot) =>
-          require(tot == 2000L, s"shard $s0 holds $tot != budget") }
-        rows.groupBy(r => (get(r, 6), get(r, 7))).foreach { case (k, rs) =>
-          require(rs.map(get(_, 0)).distinct.length <= 32, s"batch $k overfull") }
-        val docIds = rows.map(get(_, 0)).distinct
-        require(docIds.length <= 100, s"${docIds.length} sampled docs > m")
-        (t, maxTask / math.max(t, 1e-9), rows, docIds.toSet)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
-
-    // SURVIVOR-set scale invariants (the stage where cross-scale set
-    // comparison is meaningful — see Pipeline.curateSurvivors): only
-    // the selection-boundary tie sliver may move, and every survivor
-    // is an original
-    def survivors(dir: String): Set[Long] = {
-      val spark = buildSession()
-      try graft.ops.Pipeline.curateSurvivors(spark, dir)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      finally spark.stop()
-    }
-    val surv1 = survivors(sfDir)
-    val survN = survivors(ampDir)
-    require(survN.forall(_ < off), "an amplified copy survived keep-best")
-    val survOverlap = (surv1 & survN).size.toDouble / (surv1 | survN).size
-    require(survOverlap >= 0.98,
-      f"survivor-set overlap $survOverlap%.4f < 0.98 — more than the " +
-        "selection boundary tie-sliver moved")
-
-    val (t1, st1, rows1, ids1) = run(sfDir)
-    val (tN, stN, rowsN, idsN) = run(ampDir)
-    require(rows1.nonEmpty, "curation pipeline emitted nothing at 1x")
-    // copies NEVER reach the curated output either
-    val allOriginals = idsN.forall(_ < off)
-    require(allOriginals, "an amplified copy reached the curated output")
-    val sampOverlap = (ids1 & idsN).size.toDouble /
-      math.max((ids1 | idsN).size, 1)
-    val json =
-      f"""{
-  "mode": "curate_pipe", "copies": $copies%d,
-  "t1": $t1%.3f, "tN": $tN%.3f, "ratio": ${tN / math.max(t1, 1e-9)}%.2f,
-  "straggler_1x": $st1%.2f, "straggler_Nx": $stN%.2f,
-  "rows_1x": ${rows1.length}%d, "rows_Nx": ${rowsN.length}%d,
-  "survivors_1x": ${surv1.size}%d, "survivors_Nx": ${survN.size}%d,
-  "survivor_overlap": $survOverlap%.4f,
-  "all_originals": $allOriginals%b,
-  "sampled_docs_1x": ${ids1.size}%d, "sampled_docs_Nx": ${idsN.size}%d,
-  "sampled_overlap_informational": $sampOverlap%.4f,
-  "note": "structural contracts exact at both scales (tiling, shard budget, batch size, sample bound); survivor set invariant up to the selection-boundary tie sliver; the systematic sample downstream is deliberately input-sensitive (interval crossings over cumulative sums), so its cross-scale overlap is reported, not gated"
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE curatepipe wrote $outJson")
+  /** Write one run's artifact, echoed to stdout. */
+  private def writeJson(path: String, json: JObject): Unit = {
+    val text = JsonMethods.pretty(json)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(s"SCALE wrote $path\n$text")
   }
 
-  def classifyScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100CLASSIFY.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_clamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/documents.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "doc_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/documents.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE classify: ${copies}x documents at $ampDir")
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
-    def run(dir: String): (Double, Double, Long, Map[Long, String], Double, Long) = {
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        import spark.implicits._
-        spark.range(1000).selectExpr("sum(id)").collect()
-        def docs = table(spark, dir, "documents")
-        def batchRun(): (Long, Map[Long, String]) = {
-          val out = graft.ops.Classify.nbPredict(
-            docs, $"doc_id", $"text", $"lang", "lang")
-          val preds = out.filter($"doc_id" < off)
-            .select($"doc_id", $"pred_lang").collect()
-            .map(r => r.getLong(0) -> r.getString(1)).toMap
-          (out.count(), preds)
-        }
-        batchRun() // codegen warmup
-        durations.clear()
-        var t0 = System.nanoTime()
-        val (rows, preds) = batchRun()
-        val tBatch = (System.nanoTime() - t0) / 1e9
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        // the frozen-serve path: collect the model, score the 1x slice
-        t0 = System.nanoTime()
-        val model = graft.streaming.ClassifyServe.buildNbModel(
-          docs, $"doc_id", $"text", $"lang")
-        val served = graft.streaming.ClassifyServe.withOnlineNbPredict(
-          docs.filter($"doc_id" < off), $"doc_id", $"text", model).count()
-        val tServe = (System.nanoTime() - t0) / 1e9
-        (tBatch, maxTask / math.max(tBatch, 1e-9), rows, preds, tServe, served)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
+  private def ratio(t1: Double, tn: Double): Double = if (t1 > 0 && tn >= 0) tn / t1 else -1.0
 
-    val (t1, st1, rows1, p1, ts1, sv1) = run(sfDir)
-    val (tN, stN, rowsN, pN, tsN, svN) = run(ampDir)
-    require(rowsN == rows1 * copies,
-      s"classified $rowsN != $rows1 * $copies (verbatim copies all carry tokens alike)")
-    require(sv1 == svN, s"served slice changed: $sv1 != $svN")
-    val agree = p1.count { case (id, p) => pN.get(id).contains(p) }
-    val json =
-      f"""{
-  "mode": "classify_nb", "copies": $copies%d,
-  "t1": $t1%.3f, "tN": $tN%.3f, "ratio": ${tN / math.max(t1, 1e-9)}%.2f,
-  "straggler_1x": $st1%.2f, "straggler_Nx": $stN%.2f,
-  "rows_1x": $rows1%d, "rows_Nx": $rowsN%d,
-  "serve_t1": $ts1%.3f, "serve_tN": $tsN%.3f,
-  "serve_ratio": ${tsN / math.max(ts1, 1e-9)}%.2f,
-  "pred_agreement_on_1x_ids": ${agree.toDouble / math.max(p1.size, 1)}%.4f
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE classify wrote $outJson")
-  }
+  /** The 1x-vs-Nx timing fields every scaled artifact reports. */
+  private def scaled(t1: Double, tn: Double): JObject =
+    ("t1" -> r3(t1)) ~ ("tN" -> r3(tn)) ~ ("ratio" -> r3(ratio(t1, tn)))
 
-  /** `semdedup <sfDir> <copies> <outJson>` — the scaled-parameter
-    * honesty pass on dd_semdedup, mirroring [[annScale]]: the
-    * oracle-pinned query runs nlist = 10, but SemDeDup's whole scaling
-    * argument is that the within-cluster quadratic stays bounded
-    * because nlist grows with the corpus (cells stay ~N/nlist sized).
-    * Amplifies embeddings `copies`× (id-shifted verbatim vectors — a
-    * duplicate-SATURATED corpus: every copy pair is cosine 1.0, the
-    * family's worst case) and measures the full cluster+prune at
-    * √N-scale cell counts, emitting wall, straggler fraction, cell
-    * balance, and the survivor count (which must stay ≈ the 1×
-    * survivor set: the 99 extra copies of every vector are dominated
-    * by their lowest-copy twin — within-cell recall of exact dups is
-    * total because identical vectors share a cell by construction). */
-  def semDedupScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100SEMDEDUP.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_sdamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/embeddings.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "vec_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/embeddings.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE semdedup: ${copies}x embeddings at $ampDir")
+  private def noopForce(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
-    def run(dir: String, nlist: Int): (Double, Double, Long) = {
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.range(1000).selectExpr("sum(id)").collect()
-        var survivors = 0L
-        def force(): Double = {
-          val t0 = System.nanoTime()
-          val out = graft.ops.Dedup.semDedupSurvivors(
-            table(spark, dir, "embeddings"), nlist = nlist)
-          survivors = out.count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        force() // codegen warmup
-        durations.clear()
-        val t = force()
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        println(f"SCALE semdedup nlist=$nlist%d: $t%.2f s " +
-          f"(straggler ${maxTask / math.max(t, 1e-9)}%.2f, survivors $survivors%d)")
-        (t, maxTask / math.max(t, 1e-9), survivors)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
-
-    val (t1, _, surv1) = run(sfDir, graft.ops.Similarity.IvfNlist)
-    val cfgs = Seq(256, 1024).map { nlist =>
-      val (tN, st, survN) = run(ampDir, nlist)
-      (nlist, tN, st, survN)
-    }
-    val cfgJson = cfgs.map { case (nl, t, st, sv) =>
-      f"""    {"nlist": $nl%d, "tN": $t%.3f, "ratio": ${t / math.max(t1, 1e-9)}%.2f, "straggler": $st%.2f, "survivors": $sv%d}"""
-    }.mkString("[\n", ",\n", "\n  ]")
-    val json =
-      s"""{
-  "mode": "semdedup_scaled_params", "copies": $copies,
-  "t1": ${f"$t1%.3f"}, "survivors_1x": $surv1,
-  "configs": $cfgJson
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE semdedup wrote $outJson")
-  }
-
-  /** `joinskew <sfDir> <copies> <outJson>` — the adversarial-skew
-    * witness for the stream-stream-join batch twins: the events table
-    * is amplified `copies`× and ~20% of ALL rows are reassigned to ONE
-    * hot user (md5-bucket selection, so the plant is deterministic),
-    * then the purchase<-click interval join runs over it. user_id is
-    * the join key, so the hot user is one shuffle partition holding
-    * 20% of both sides AND a quadratic share of the output — exactly
-    * the shape AQE's skew-join split must break across tasks. The
-    * artifact records wall, the max-task/wall straggler fraction, and
-    * the hot user's share of the output. */
-  def joinSkew(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val outJson = args.drop(2).headOption.getOrElse("SKEW_JOIN_r15.json")
-    val hotUser = 999999999L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_jskew").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val ev = s.read.parquet(s"$sfDir/events.parquet")
-        val amp = ev.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(
-            ($"event_id" + $"__copy" * lit(1000000000L)).as("event_id"),
-            $"ts", $"event_type",
-            // ~20% of rows -> the hot user; the rest keep per-copy
-            // disjoint user spaces (joins land exactly as at 1x)
-            when(conv(substring(md5(($"event_id" + $"__copy" * lit(1000000000L))
-              .cast("string")), 1, 4), 16, 10).cast("int") % 100 < 20, lit(hotUser))
-              .otherwise($"user_id" + $"__copy" * lit(1000000L)).as("user_id"),
-            $"value", $"props")
-        amp.repartition(32).write.mode("overwrite").parquet(s"$ampDir/events.parquet")
-      } finally s.stop()
-    }
-    println(s"SCALE joinskew: ${copies}x events, 20% on one user, at $ampDir")
-    val spark = buildSession()
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        durations.add(te.taskInfo.duration); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      import spark.implicits._
-      spark.range(1000).selectExpr("sum(id)").collect()
-      val ev = table(spark, ampDir, "events")
-      def measure(tag: String,
-          join: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-            String) => org.apache.spark.sql.DataFrame): (Double, Double, Long, Long) = {
-        def joined = join(
-          graft.streaming.Windows.purchaseSide(ev),
-          graft.streaming.Windows.clickSide(ev), "24 hours")
-        joined.write.format("noop").mode("overwrite").save() // codegen warmup
-        durations.clear()
-        val t0 = System.nanoTime()
-        val agg = joined.agg(count(lit(1)),
-          sum(when($"user_id" === hotUser, 1L).otherwise(0L))).head()
-        val t = (System.nanoTime() - t0) / 1e9
-        val (rows, hotRows) = (agg.getLong(0), agg.getLong(1))
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        val straggler = maxTask / math.max(t, 1e-9)
-        println(f"SCALE joinskew[$tag]: $t%.2f s, straggler $straggler%.2f, " +
-          f"rows $rows%d (hot ${100.0 * hotRows / math.max(rows, 1)}%.1f%%)")
-        (t, straggler, rows, hotRows)
-      }
-      val (tp, sp, rp, hp) = measure("plain",
-        graft.streaming.Windows.purchaseClickJoin(_, _, _))
-      val (tb, sb, rb, hb) = measure("bucketed",
-        graft.streaming.Windows.purchaseClickJoinBucketed(_, _, _))
-      require(rp == rb && hp == hb,
-        s"bucketed rewrite changed the output: plain ($rp, $hp) vs bucketed ($rb, $hb)")
-      val json = f"""{
-  "mode": "join_hot_user", "copies": $copies%d, "hot_frac": 0.2,
-  "rows": $rp%d, "hot_rows": $hp%d,
-  "plain":    {"t": $tp%.3f, "straggler": $sp%.2f},
-  "bucketed": {"t": $tb%.3f, "straggler": $sb%.2f}
-}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"SCALE joinskew wrote $outJson")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.stop()
-    }
-  }
-
-  def annScale(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE100ANN_r10.json")
-    val off = 1000000000L
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_annamp").toString
-    locally {
-      val s = buildSession()
-      try {
-        import s.implicits._
-        val df = s.read.parquet(s"$sfDir/embeddings.parquet")
-        df.crossJoin(s.range(copies).select($"id".as("__copy")))
-          .select(df.schema.fields.toSeq.map { f =>
-            if (f.name == "vec_id")
-              (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$ampDir/embeddings.parquet")
-      } finally s.stop()
-    }
-    val n = copies * 2000L // recorded, not load-bearing
-    println(s"SCALE ann: ${copies}x embeddings at $ampDir")
-
-    // (nlist, nprobe): contract config, then √N-scale cells at a
-    // comparable-or-smaller probed fraction
-    val configs = Seq(
-      (graft.ops.Similarity.IvfNlist, 2), (64, 8), (256, 16))
-    val rows = configs.map { case (nlist, nprobe) =>
-      val spark = buildSession()
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.range(1000).selectExpr("sum(id)").collect()
-        def force(): Double = {
-          val t0 = System.nanoTime()
-          noopForce(graft.ops.Similarity.ivfTopK(spark, ampDir, nprobe, 5,
-            cells => graft.ops.Similarity.kmeansCells(cells, nlist = nlist)))
-          (System.nanoTime() - t0) / 1e9
-        }
-        force() // warmup (codegen JIT; the build itself re-runs per force)
-        durations.clear()
-        val t = force()
-        val maxTask = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-        // cell balance of the trained assignment at this nlist
-        val emb = table(spark, ampDir, "embeddings")
-          .select(col("vec_id"),
-            graft.ops.Similarity.asDouble(col("embedding")).as("v"))
-        val stats = graft.ops.Similarity.kmeansCells(emb, nlist = nlist)
-          .groupBy(col("cell")).agg(count(lit(1)).as("m"))
-          .agg(count(lit(1)), max(col("m")), avg(col("m"))).head()
-        val (cells, mx, mean) =
-          (stats.getLong(0), stats.getLong(1), stats.getDouble(2))
-        println(f"SCALE ann nlist=$nlist%d nprobe=$nprobe%d: $t%.2f s " +
-          f"(straggler ${maxTask / math.max(t, 1e-9)}%.2f, cells $cells%d, " +
-          f"max/mean ${mx / math.max(mean, 1e-9)}%.2f)")
-        (nlist, nprobe, t, maxTask / math.max(t, 1e-9), cells, mx, mean)
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.stop()
-      }
-    }
-    // PQ at the contract codebook on the same amplified corpus
-    val pqT = {
-      val spark = buildSession()
-      try {
-        spark.range(1000).selectExpr("sum(id)").collect()
-        def force(): Double = {
-          val t0 = System.nanoTime()
-          noopForce(graft.ops.ProductQuant.pqTopK(spark, ampDir, m = 10, k = 5))
-          (System.nanoTime() - t0) / 1e9
-        }
-        force(); val t = force()
-        println(f"SCALE ann pq: $t%.2f s"); t
-      } finally spark.stop()
-    }
-    val cfgJson = rows.map { case (nl, np, t, st, cells, mx, mean) =>
-      f"""    {"nlist": $nl%d, "nprobe": $np%d, "t": $t%.3f, "straggler": $st%.2f, "cells": $cells%d, "max_cell": $mx%d, "mean_cell": $mean%.1f}"""
-    }.mkString("[\n", ",\n", "\n  ]")
-    val json =
-      s"""{
-  "mode": "ann_scaled_params", "copies": $copies, "n_vectors": $n,
-  "configs": $cfgJson,
-  "pq_contract_t": $pqT
-}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"SCALE ann wrote $outJson")
-  }
+  // ---- amplification -------------------------------------------------
 
   /** Key columns shifted per copy so each replica is FK-consistent and
     * disjoint from the others. Dims (region, nation) are NOT amplified:
@@ -1164,15 +241,17 @@ object ScaleSmoke {
     rng.shuffle((33 to 126).map(_.toChar).toVector).mkString
   }
 
-  /** Amplify the whole database into `outDir`: `copies` id-shifted,
-    * FK-consistent replicas of every fact table; dims copied verbatim.
-    * Raw parquet in/out (no `table()` ts normalization) so the
-    * amplified dir is schema-identical to the driver's. */
+  /** Amplify `tables` (default: the whole database) into `outDir`:
+    * `copies` id-shifted, FK-consistent replicas of every fact table;
+    * dims copied verbatim. Raw parquet in/out (no `table()` ts
+    * normalization) so the amplified dir is schema-identical to the
+    * driver's. Callers that read one table amplify only that one —
+    * amplifying the whole database 100× to read documents is waste. */
   def amplifyDatabase(spark: SparkSession, sfDir: String, outDir: String,
-      copies: Int, distinctDocs: Boolean = false): Unit = {
+      copies: Int, distinctDocs: Boolean = false,
+      tables: Seq[String] = Tables.driverTables): Unit = {
     import spark.implicits._
-    val off = 1000000000L
-    graft.model.Tables.driverTables.foreach { t =>
+    tables.foreach { t =>
       val df = spark.read.parquet(s"$sfDir/$t.parquet")
       val out = shiftCols.get(t) match {
         case None => df // broadcast dim: unchanged
@@ -1181,7 +260,7 @@ object ScaleSmoke {
             .crossJoin(spark.range(copies).select($"id".as("__copy")))
             .select(df.schema.fields.toSeq.map { f =>
               if (keys.contains(f.name))
-                (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
+                (col(f.name) + $"__copy" * lit(Offset)).cast(f.dataType).as(f.name)
               else col(f.name)
             } :+ col("__copy"): _*)
           val transformed =
@@ -1223,225 +302,613 @@ object ScaleSmoke {
     }
   }
 
-  private def noopForce(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  /** Whole-query-set 1x vs Nx proof run → JSON. Optional 4th arg: a
-    * comma-separated query subset (e.g. the aggregate family at
-    * copies=100, where amplifying and sweeping all 69 queries would
-    * dominate the run for four data points). */
-  def fullSet(args: Array[String], distinctDocs: Boolean = false): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val outJson = args.drop(2).headOption.getOrElse("SCALE_r05.json")
-    val subset: Seq[String] =
-      args.drop(3).headOption.toSeq.flatMap(_.split(",")).map(_.trim)
-    val ampDir = java.nio.file.Files.createTempDirectory("graft_amp").toString
-    val ampSession = buildSession()
+  /** Run `f` over a temp dir holding `tables` amplified `copies`× (in
+    * its own session), deleting the dir afterwards. */
+  private def withAmplified[T](sfDir: String, copies: Int, tables: Seq[String],
+      distinctDocs: Boolean = false)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_amp").toString
     try {
-      amplifyDatabase(ampSession, sfDir, ampDir, copies, distinctDocs)
-      ampSession.stop()
-      println(s"SCALE amplified ${copies}x database at $ampDir" +
+      withMeter(meter => amplifyDatabase(meter.spark, sfDir, dir, copies, distinctDocs, tables))
+      println(s"SCALE amplified ${copies}x ${tables.mkString(",")} at $dir" +
         (if (distinctDocs) " (distinct documents)" else ""))
-
-      // Each sweep gets a FRESH SparkSession (the amplify writes and the
-      // other sweep contribute zero session state — broadcast blocks,
-      // checkpoint blocks, shuffle tracking — to the measurement; a
-      // shared session measurably distorted repeat runs). Per query:
-      // one untimed warmup (whole-stage-codegen JIT compiles on first
-      // execution — identical plan at both scales, so neither side may
-      // pay it in the ratio), then the MEDIAN of three timed runs —
-      // a 130-execution local sweep shows sporadic multi-second stalls
-      // (GC / cleaner / IO), and a single sample let one stall print a
-      // 90x "ratio" that in-isolation reruns put at ~4x.
-      // Per query: (median of 3, straggler fraction = max task time /
-      // wall of the LAST timed run, error). The straggler fraction is
-      // the skew witness the 100x artifacts need: if a banded join
-      // serialized its hot bucket into one task, max-task/wall ≈ 1.
-      def sweep(dir: String, only: Seq[String] = Nil): Map[String, (Double, Double, Long, Option[String])] = {
-        val spark = buildSession()
-        val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            durations.add(te.taskInfo.duration); ()
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          // one-time session costs outside all timed runs (same as Bench)
-          spark.range(1000).selectExpr("sum(id)").collect()
-          table(spark, dir, "region").count()
-          val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-          (if (only.isEmpty) qs else qs.filter(q => only.contains(q._1)))
-            .map { case (name, fn) =>
-              val r =
-                try {
-                  noopForce(fn(spark, dir))
-                  // output-row count, outside every timed sample (and
-                  // before the straggler window opens at i == 3): the
-                  // artifact's scaling story needs rows_1x vs rows_Nx —
-                  // a ratio over 10x reads very differently when the
-                  // true output itself grew 100x
-                  val rows = fn(spark, dir).count()
-                  val samples = (1 to 3).map { i =>
-                    if (i == 3) durations.clear()
-                    val t0 = System.nanoTime()
-                    noopForce(fn(spark, dir))
-                    (System.nanoTime() - t0) / 1e9
-                  }
-                  val lastWall = samples.last
-                  val maxTask = { import scala.jdk.CollectionConverters._
-                    durations.iterator().asScala.foldLeft(0L)(math.max) / 1e3 }
-                  (samples.sorted.apply(1),
-                    if (lastWall > 0) maxTask / lastWall else 0.0,
-                    rows, Option.empty[String])
-                } catch {
-                  case e: Throwable =>
-                    (Double.NaN, 0.0, -1L, Some(e.getClass.getSimpleName))
-                }
-              println(f"SCALE $dir%s $name%s: ${r._1}%.2f s (straggler ${r._2}%.2f, rows ${r._3})${r._4.fold("")(" ERR " + _)}")
-              name -> r
-            }.toMap
-        } finally {
-          spark.sparkContext.removeSparkListener(listener)
-          spark.stop()
-        }
-      }
-
-      val base = sweep(sfDir, subset)
-      val amp = sweep(ampDir, subset)
-      val names = base.keys.toSeq.sorted
-      def ratioOf(n: String): Double = {
-        val (t1, tn) = (base(n)._1, amp(n)._1)
-        if (!t1.isNaN && !tn.isNaN && t1 > 0) tn / t1 else -1.0
-      }
-      def straggler(n: String): Double = amp(n)._2
-      // Queries whose sweep ratio exceeds 10 are re-measured ALONE in a
-      // fresh session: the 130-execution sweep measures queries under
-      // shared-session memory pressure (storage blocks, shuffle state,
-      // page-cache churn from every prior query), which inflates a few
-      // window-heavy queries well past their plan-inherent scaling —
-      // e.g. q_rolling_range timed 31s mid-sweep but 3.0s isolated on
-      // the same amplified data. Both numbers are reported; the
-      // isolated one is the plan's own scaling.
-      val over = names.filter(n => ratioOf(n) > 10)
-      if (over.nonEmpty) println(s"SCALE isolated recheck: ${over.mkString(", ")}")
-      // one fresh session PER flagged query: a recheck session shared
-      // across flagged queries re-accumulates the very pressure it
-      // exists to exclude (measured: a query stable at 2s alone timed
-      // 23s when rechecked downstream of another flagged query)
-      val iso = over.map(n => n -> sweep(ampDir, Seq(n)).apply(n)).toMap
-      val entries = names.map { n =>
-        val (t1raw, _, rows1, e1) = base(n)
-        val (tnraw, frac, rowsN, en) = amp(n)
-        val (t1, tn) = (if (t1raw.isNaN) -1.0 else t1raw, if (tnraw.isNaN) -1.0 else tnraw)
-        val ratio = if (t1 > 0 && tn >= 0) tn / t1 else -1.0
-        val rowsRatio = if (rows1 > 0 && rowsN >= 0) rowsN.toDouble / rows1 else -1.0
-        val isoPart = iso.get(n).filterNot(_._1.isNaN).fold("") { case (ti, fi, _, _) =>
-          f""", "tN_iso": $ti%.3f, "ratio_iso": ${if (t1 > 0) ti / t1 else -1.0}%.2f, "straggler_iso": $fi%.2f"""
-        }
-        f"""    "$n": {"t1": $t1%.3f, "tN": $tn%.3f, "ratio": $ratio%.2f, "straggler_N": $frac%.2f, "rows_1x": $rows1, "rows_Nx": $rowsN, "rows_ratio": $rowsRatio%.2f""" + isoPart +
-          (e1.orElse(en).fold("")(e => s""", "err": "$e"""")) + "}"
-      }
-      val t1Total = base.values.map(_._1).filterNot(_.isNaN).sum
-      val tnTotal = amp.values.map(_._1).filterNot(_.isNaN).sum
-      val json =
-        f"""{
-  "copies": $copies,
-  "sf": "$sfDir",
-  "total_t1": $t1Total%.1f,
-  "total_tN": $tnTotal%.1f,
-  "total_ratio": ${tnTotal / t1Total}%.2f,
-  "failed": ${(base.values ++ amp.values).count(_._4.isDefined)},
-  "queries": {
-${entries.mkString(",\n")}
-  }
-}
-"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-        json.getBytes("UTF-8"))
-      println(s"SCALE wrote $outJson (total ${f"$t1Total%.1f"} s @1x -> ${f"$tnTotal%.1f"} s @${copies}x)")
+      f(dir)
     } finally {
-      val p = new org.apache.hadoop.fs.Path(ampDir)
+      val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
       ()
     }
   }
 
-  /** Hot-band skew stress for the banded dedup joins (see object doc). */
-  def hotBand(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val variants = args.drop(1).headOption.map(_.toInt).getOrElse(2500)
-    val spark = buildSession()
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    try {
-      val base = table(spark, sfDir, "documents")
-      val n = base.count()
-      // background: 2 id-shifted copies (duplicate-saturated baseline)
-      val bg = base
-        .crossJoin(spark.range(2).select($"id".as("__copy")))
-        .select(($"doc_id" + $"__copy" * lit(1000000L)).as("doc_id"),
-          $"text", $"lang", $"source", $"n_chars")
-      // hot band: `variants` DISTINCT texts sharing ~all shingles — one
-      // appended unique token each, so exact-content collapse can NOT
-      // absorb them (all contents distinct) and every minhash band
-      // funnels them into the same bucket
-      val seedText = base.orderBy($"doc_id").select($"text").head().getString(0)
-      val hot = spark.range(variants).select(
-        ($"id" + lit(500000000L)).as("doc_id"),
-        concat(lit(seedText), lit(" varianttok"), $"id").as("text"),
-        lit("en").as("lang"), lit("hot").as("source"),
-        (length(lit(seedText)) + lit(12)).cast("long").as("n_chars"))
-      bg.unionByName(hot).write.parquet(s"$dir/documents.parquet")
-      // embedding twin of the text hot band: `variants` DISTINCT
-      // vectors around one seed, each perturbed on coordinate 0 by a
-      // different tiny step — exact-vector collapse cannot absorb them
-      // (all distinct), yet the perturbation is far too small to flip
-      // a hyperplane sign, so every LSH band hashes them into the SAME
-      // bucket: the adversarial case for dd_embed_cos / s_ann_lsh's
-      // banded blocking
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nE = emb.count()
-      val ebg = emb
-        .crossJoin(spark.range(2).select($"id".as("__copy")))
-        .select(($"vec_id" + $"__copy" * lit(1000000L)).as("vec_id"),
-          $"embedding", $"label")
-      val seedVec = emb.orderBy($"vec_id").select($"embedding")
-        .head().getSeq[Float](0)
-      val hotE = spark.range(variants).select(
-        ($"id" + lit(500000000L)).as("vec_id"),
-        array((lit(seedVec.head) + ($"id" + 1L).cast("float") * lit(1e-6f))
-            .cast("float") +: seedVec.tail.map(f => lit(f)): _*).as("embedding"),
-        lit(999).cast("int").as("label")) // label is int32 in the driver schema
-      ebg.unionByName(hotE).write.parquet(s"$dir/embeddings.parquet")
-      val total = n * 2 + variants
-      println(s"SKEW corpus: $total docs, hot band = $variants distinct near-identical texts (${100 * variants / total}%)")
-      println(s"SKEW embeddings: ${nE * 2 + variants} vectors, hot bucket = $variants distinct near-identical vectors")
+  // ---- invariants --------------------------------------------------
 
-      // task-level skew metrics: if the hot bucket serialized into one
-      // task, max task time ≈ whole-stage time; AQE's skew-join split
-      // (adaptive.skewJoin, default on) plus the pair-bound verify keep
-      // max/median bounded instead
-      val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          durations.add(te.taskInfo.duration); ()
+  /** A query's scale invariants. `each` runs on its output at both
+    * scales: it throws on a violation and returns the stats the
+    * artifact records as `<stat>_1x` / `<stat>_Nx`. `rowsNx`, when
+    * set, gives the exact output rows at `copies`× from the rows at 1x. */
+  final case class Invariant(
+      each: DataFrame => Seq[(String, Long)] = _ => Nil,
+      rowsNx: Option[(Long, Int) => Long] = None)
+
+  private def flagged(out: DataFrame): (Long, Long) = {
+    val a = out.agg(count(lit(1)),
+      coalesce(sum(when(col("selected"), 1L).otherwise(0L)), lit(0L))).head()
+    (a.getLong(0), a.getLong(1))
+  }
+
+  /** Exactly ceil(frac · n) rows selected — the bucketed rank's claim
+    * under any tie density. */
+  private def topFrac(frac: Double) = Invariant(out => {
+    val (n, sel) = flagged(out)
+    require(sel == math.ceil(n * frac).toLong, s"selected $sel != ceil($frac * $n)")
+    Seq("selected" -> sel)
+  })
+
+  /** Every (band[, shard]) key numbers its arrivals densely: its max
+    * batch == (n - 1) div 32 (checked Spark-side, nothing corpus-sized
+    * collects). */
+  private def denseBatches(keys: String*)(out: DataFrame): Seq[(String, Long)] = {
+    val bad = out.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), max(col("batch")).as("mb"))
+      .filter(col("mb") =!= expr("(n - 1) div 32")).count()
+    require(bad == 0L, s"$bad keys with max batch != (n-1) div 32")
+    Nil
+  }
+
+  /** pipe_curate's per-run structural contracts (the PipelineSpec
+    * invariants, re-checked at scale): exact segment tiling, exact
+    * non-terminal shard budgets (2000), ≤ 32 docs per batch, ≤ 100
+    * sampled docs, and a non-empty result. */
+  private def curatedContracts(out: DataFrame): Seq[(String, Long)] = {
+    val broken = out.groupBy(col("doc_id"))
+      .agg(sum(col("tok_len")).as("tiled"), max(col("n_tokens")).as("n"),
+        min_by(col("tok_start"), col("shard")).as("first"))
+      .filter(col("tiled") =!= col("n") || col("first") =!= 0L).count()
+    require(broken == 0L, s"$broken docs with broken segment tiling")
+    val last = out.agg(max(col("shard"))).head().get(0)
+    val short = out.filter(col("shard") =!= lit(last)).groupBy(col("shard"))
+      .agg(sum(col("tok_len")).as("t")).filter(col("t") =!= 2000L).count()
+    require(short == 0L, s"$short non-terminal shards off the 2000-token budget")
+    val overfull = out.groupBy(col("len_band"), col("batch"))
+      .agg(countDistinct(col("doc_id")).as("d")).filter(col("d") > 32).count()
+    require(overfull == 0L, s"$overfull batches over 32 docs")
+    val docs = out.select(col("doc_id")).distinct().count()
+    require(docs > 0 && docs <= 100, s"$docs sampled docs not in (0, 100]")
+    Seq("sampled_docs" -> docs)
+  }
+
+  /** The check table, keyed by query name; every sweep runs it. */
+  private[graft] val invariants: Map[String, Invariant] = Map(
+    "t_dsir" -> topFrac(0.25),
+    "t_select_excess" -> topFrac(0.25),
+    "t_select_quality" -> topFrac(0.5),
+    "t_sample_weighted" -> Invariant(out => {
+      val (_, sel) = flagged(out)
+      require(sel > 0 && sel <= 200, s"sample selected $sel not in (0, 200]")
+      Seq("selected" -> sel)
+    }),
+    "t_batch_bylen" -> Invariant(out => {
+      val a = out.groupBy(col("len_band"), col("batch")).agg(count(lit(1)).as("n"))
+        .agg(max(col("n")), count(lit(1))).head()
+      require(a.getLong(0) <= 32, s"batch of ${a.getLong(0)} > 32")
+      Seq("batches" -> a.getLong(1))
+    }),
+    "t_pack_split" -> Invariant(out => {
+      val a = out.groupBy(col("shard")).agg(sum(col("tok_len")).as("n"))
+        .agg(count(lit(1)), max(col("n"))).head()
+      require(a.getLong(1) <= 5000L, s"shard over budget: ${a.getLong(1)}")
+      Seq("shards" -> a.getLong(0))
+    }),
+    // exact per-GROUP counts: every source must select exactly
+    // ceil(0.25 * its own size) — the grouped primitive's claim
+    "t_select_bydomain" -> Invariant(out => {
+      val perSource = out.groupBy(col("source")).agg(count(lit(1)).as("n"),
+        sum(when(col("selected"), 1L).otherwise(0L)).as("sel"))
+      val bad = perSource.filter(col("sel") =!= ceil(col("n") * 0.25).cast("long")).count()
+      require(bad == 0L, s"$bad sources with sel != ceil(0.25 * n)")
+      Seq("selected" -> flagged(out)._2)
+    }),
+    // verbatim copies all carry tokens alike; the served slice is the
+    // original ids only, so it must not change
+    "t_classify_nb" -> Invariant(rowsNx = Some(_ * _)),
+    "w_classify_nb" -> Invariant(rowsNx = Some((rows, _) => rows)),
+    "w_batch_bylen" -> Invariant(denseBatches("len_band")),
+    "w_batch_bylen_sharded" -> Invariant(denseBatches("len_band", "shard")),
+    "pipe_curate" -> Invariant(curatedContracts))
+
+  // ---- query sweeps ------------------------------------------------
+
+  /** One query's sweep result; a failed run reads t = rows = -1. */
+  private final case class Run(t: Double, straggler: Double, rows: Long,
+      stats: Seq[(String, Long)], err: Option[String])
+
+  /** Sweep `only` (every query when empty) over `dir` in one fresh
+    * session. Per query: one untimed warmup, then the MEDIAN of three
+    * timed runs — a 130-execution local sweep shows sporadic
+    * multi-second stalls (GC / cleaner / IO), and a single sample let
+    * one stall print a 90x "ratio" that in-isolation reruns put at
+    * ~4x. Then, outside every timed run, the output-row count (a ratio
+    * over 10x reads very differently when the true output itself grew
+    * 100x) and the query's [[invariants]]. */
+  private def sweep(dir: String, only: Seq[String]): Map[String, Run] = withMeter { meter =>
+    val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    (if (only.isEmpty) qs else qs.filter(q => only.contains(q._1)))
+      .map { case (name, fn) =>
+        val r =
+          try {
+            val (t, _) = meter.time(runs = 3)(noopForce(fn(meter.spark, dir)))
+            val out = fn(meter.spark, dir)
+            Run(t.wall, t.straggler, out.count(),
+              invariants.get(name).fold(Seq.empty[(String, Long)])(_.each(out)), None)
+          } catch {
+            case e: Throwable =>
+              Run(-1.0, 0.0, -1L, Nil, Some(e.getClass.getSimpleName +
+                Option(e.getMessage).fold("")(m => ": " + m.linesIterator.next())))
+          }
+        println(f"SCALE $dir%s $name%s: ${r.t}%.2f s (straggler ${r.straggler}%.2f, rows ${r.rows})${r.err.fold("")(" ERR " + _)}")
+        name -> r
+      }.toMap
+  }
+
+  /** 1x vs `copies`× over `subset`: both sweeps, isolated rechecks, the
+    * cross-scale row rules → the artifact's fields and the count of
+    * failed runs plus violated invariants. */
+  private def scaleRun(sfDir: String, ampDir: String, copies: Int,
+      subset: Seq[String]): (JObject, Int) = {
+    val base = sweep(sfDir, subset)
+    val amp = sweep(ampDir, subset)
+    val names = base.keys.toSeq.sorted
+    // Queries whose sweep ratio exceeds 10 are re-measured ALONE in a
+    // fresh session: the 130-execution sweep measures queries under
+    // shared-session memory pressure (storage blocks, shuffle state,
+    // page-cache churn from every prior query), which inflates a few
+    // window-heavy queries well past their plan-inherent scaling —
+    // e.g. q_rolling_range timed 31s mid-sweep but 3.0s isolated on
+    // the same amplified data. Both numbers are reported; the
+    // isolated one is the plan's own scaling. A one-query sweep is
+    // already isolated.
+    val over = if (names.size < 2) Nil
+      else names.filter(n => ratio(base(n).t, amp(n).t) > 10)
+    if (over.nonEmpty) println(s"SCALE isolated recheck: ${over.mkString(", ")}")
+    // one fresh session PER flagged query: a recheck session shared
+    // across flagged queries re-accumulates the very pressure it
+    // exists to exclude (measured: a query stable at 2s alone timed
+    // 23s when rechecked downstream of another flagged query)
+    val iso = over.map(n => n -> sweep(ampDir, Seq(n)).apply(n)).toMap
+    val rowViolations = (for {
+      n <- names
+      rule <- invariants.get(n).flatMap(_.rowsNx)
+      want = rule(base(n).rows, copies)
+      if base(n).err.isEmpty && amp(n).err.isEmpty && amp(n).rows != want
+    } yield n -> s"rows_Nx ${amp(n).rows} != $want").toMap
+    val queries = names.map { n =>
+      val (b, a) = (base(n), amp(n))
+      val isoPart = iso.get(n).filter(_.err.isEmpty).fold(JObject()) { i =>
+        ("tN_iso" -> r3(i.t)) ~ ("ratio_iso" -> r3(ratio(b.t, i.t))) ~
+          ("straggler_iso" -> r3(i.straggler))
+      }
+      val stats = JObject(b.stats.map { case (k, v) => (k + "_1x") -> JInt(v) }.toList ++
+        a.stats.map { case (k, v) => (k + "_Nx") -> JInt(v) })
+      n -> (scaled(b.t, a.t) ~
+        ("straggler_1x" -> r3(b.straggler)) ~ ("straggler_N" -> r3(a.straggler)) ~
+        ("rows_1x" -> b.rows) ~ ("rows_Nx" -> a.rows) ~
+        ("rows_ratio" -> r3(if (b.rows > 0 && a.rows >= 0) a.rows.toDouble / b.rows else -1.0)) ~
+        stats ~ isoPart ~ ("err" -> b.err.orElse(a.err).orElse(rowViolations.get(n))))
+    }
+    val t1Total = base.values.map(_.t).filter(_ >= 0).sum
+    val tnTotal = amp.values.map(_.t).filter(_ >= 0).sum
+    val failed = (base.values ++ amp.values).count(_.err.isDefined) + rowViolations.size
+    println(f"SCALE total $t1Total%.1f s @1x -> $tnTotal%.1f s @${copies}x, $failed failed")
+    (("copies" -> copies) ~ ("sf" -> sfDir) ~ ("total_t1" -> r3(t1Total)) ~
+      ("total_tN" -> r3(tnTotal)) ~ ("total_ratio" -> r3(ratio(t1Total, tnTotal))) ~
+      ("failed" -> failed) ~ ("queries" -> JObject(queries.toList)), failed)
+  }
+
+  /** `full`/`fulld`: the whole-query-set 1x vs Nx proof run. Optional
+    * 4th arg: a comma-separated query subset (e.g. the aggregate family
+    * at copies=100, where amplifying and sweeping all queries would
+    * dominate the run for four data points). Failed queries are
+    * recorded in the artifact, not fatal. */
+  def fullSet(args: Array[String], distinctDocs: Boolean = false): Unit = {
+    val p = parse(args, 10, "SCALE_r05.json")
+    val subset = p.rest.headOption.toSeq.flatMap(_.split(",")).map(_.trim)
+    withAmplified(p.sfDir, p.n, Tables.driverTables, distinctDocs) { amp =>
+      writeJson(p.out, scaleRun(p.sfDir, amp, p.n, subset)._1)
+    }
+  }
+
+  /** A document family: its queries' sweep plus its probe; any failed
+    * run or violated invariant fails the mode after the artifact is
+    * written. */
+  private def familyScale(f: Family, args: Array[String]): Unit = {
+    val p = parse(args, 100, defaultOut(f.mode))
+    withAmplified(p.sfDir, p.n, Seq("documents")) { amp =>
+      val (fields, failed) = scaleRun(p.sfDir, amp, p.n, f.queries)
+      writeJson(p.out, ("mode" -> f.mode) ~ fields ~ f.probe(p, amp))
+      require(failed == 0, s"${f.mode}: $failed failed runs or violated invariants (see ${p.out})")
+    }
+  }
+
+  /** batchshard's cross-form invariant at `copies`×: the exact-per-band
+    * form (`shards = 1`, w_batch_bylen's semantic) numbers each band
+    * serially — under batch replay one task drains one band, so wall
+    * time is bounded below by the LARGEST band no matter how many
+    * cores idle. The `shards`-way form (4th arg, default 8 like
+    * w_batch_bylen_sharded) keys state by (band, hash-shard), cutting
+    * the serial unit ~1/shards at the cost of per-shard numbering. Both
+    * forms must number densely and hold identical per-band totals —
+    * sharding must never move a doc across bands (which also conserves
+    * rows). Reports the largest serial unit each form drains. */
+  private def bandProbe(p: Args, ampDir: String): JObject = withMeter { meter =>
+    import meter.spark.implicits._
+    val shards = p.rest.headOption.fold(8)(_.toInt)
+    def bands(sh: Int): Map[Long, Long] = {
+      val out = graft.streaming.Batching.withOnlineBatchesSharded(
+        table(meter.spark, ampDir, "documents"), $"doc_id", $"text", shards = sh).toDF()
+      denseBatches((if (sh == 1) Seq("len_band") else Seq("len_band", "shard")): _*)(out)
+      out.groupBy($"len_band").agg(count(lit(1))).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val serial = bands(1)
+    require(serial == bands(shards),
+      "sharding moved documents across bands — band membership must be invariant")
+    ("shards" -> shards) ~ ("rows" -> serial.values.sum) ~
+      ("largest_band" -> serial.values.max) ~
+      ("serial_unit_serial" -> serial.values.max) ~
+      ("serial_unit_sharded_approx" -> serial.values.max / shards)
+  }
+
+  /** curatepipe's cross-scale invariant. What is and is NOT
+    * scale-invariant under verbatim copies, measured and honest:
+    * keep-best ALWAYS returns originals (copy ids shift above every
+    * original, quality ties break to the lowest id — so no copy may
+    * survive, or reach the curated output), and pipe_curate's
+    * structural contracts hold at both scales ([[invariants]]). But
+    * the top-half SELECTION CUT is a corpus-relative rank, and a rank
+    * cut through a TIED order-key group is inherently not
+    * copy-invariant: at 100× every tie multiplies 100×, so `ceil(N/2)`
+    * slices the boundary tie group differently, a boundary-sliver of
+    * documents swaps in/out, and every downstream running offset
+    * shifts — the same semantics-driven boundary behavior
+    * w_select_quality documents for its frozen threshold. So the
+    * SURVIVOR sets (see Pipeline.curateSurvivors) must overlap ≥ 0.98
+    * instead of matching bit for bit; the systematic sample downstream
+    * is deliberately input-sensitive (interval crossings over
+    * cumulative sums) and is not compared across scales. */
+  private def survivorProbe(p: Args, ampDir: String): JObject = {
+    def survivors(dir: String): Set[Long] = withMeter { meter =>
+      graft.ops.Pipeline.curateSurvivors(meter.spark, dir)
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    }
+    val (surv1, survN) = (survivors(p.sfDir), survivors(ampDir))
+    require(survN.forall(_ < Offset), "an amplified copy survived keep-best")
+    val copiesOut = withMeter(meter => graft.ops.Pipeline.pipeCurate(meter.spark, ampDir)
+      .filter(col("doc_id") >= Offset).count())
+    require(copiesOut == 0L, "an amplified copy reached the curated output")
+    val overlap = (surv1 & survN).size.toDouble / (surv1 | survN).size
+    require(overlap >= 0.98,
+      f"survivor-set overlap $overlap%.4f < 0.98 — more than the " +
+        "selection boundary tie-sliver moved")
+    ("survivors_1x" -> surv1.size) ~ ("survivors_Nx" -> survN.size) ~
+      ("survivor_overlap" -> math.rint(overlap * 1e4) / 1e4)
+  }
+
+  // ---- parameter probes --------------------------------------------
+
+  /** `ann <sfDir> <copies> <outJson>` — the scaled-parameter honesty
+    * pass on the IVF family: the oracle-pinned queries run nlist = 10
+    * (tiny by design — the DuckDB replay unrolls training), but the
+    * 100 TB design claim is nlist ≈ √N. This mode amplifies the
+    * embeddings table `copies`× (id-shifted, verbatim vectors — the
+    * point is shape and cost, not recall, which SimilaritySpec pins at
+    * real data scale) and measures the full build+serve ivfTopK at the
+    * contract config AND at √N-scale cell counts, with nprobe held to
+    * a comparable probed fraction. What must hold for the design claim:
+    * the centroid side stays broadcast-small (nlist × dim doubles),
+    * the per-round assignment stays one map pass + one tiny aggregate,
+    * serving cost FALLS as nlist grows (nprobe/nlist of the corpus is
+    * scanned), and no cell degenerates into a straggler (cell-balance
+    * stats are emitted alongside). PQ serves from a codebook whose
+    * size is m × ksub × dsub — dimension-bound, INDEPENDENT of N — so
+    * its honesty number here is just the 100× build+serve time at the
+    * contract codebook. */
+  def annScale(args: Array[String]): Unit = {
+    val p = parse(args, 100, "SCALE100ANN_r10.json")
+    withAmplified(p.sfDir, p.n, Seq("embeddings")) { ampDir =>
+      // (nlist, nprobe): contract config, then √N-scale cells at a
+      // comparable-or-smaller probed fraction
+      val configs = Seq((graft.ops.Similarity.IvfNlist, 2), (64, 8), (256, 16))
+      val rows = configs.map { case (nlist, nprobe) =>
+        withMeter { meter =>
+          val (t, _) = meter.time()(noopForce(graft.ops.Similarity.ivfTopK(
+            meter.spark, ampDir, nprobe, 5,
+            cells => graft.ops.Similarity.kmeansCells(cells, nlist = nlist))))
+          // cell balance of the trained assignment at this nlist
+          val emb = table(meter.spark, ampDir, "embeddings")
+            .select(col("vec_id"),
+              graft.ops.Similarity.asDouble(col("embedding")).as("v"))
+          val stats = graft.ops.Similarity.kmeansCells(emb, nlist = nlist)
+            .groupBy(col("cell")).agg(count(lit(1)).as("m"))
+            .agg(count(lit(1)), max(col("m")), avg(col("m"))).head()
+          val (cells, mx, mean) =
+            (stats.getLong(0), stats.getLong(1), stats.getDouble(2))
+          ("nlist" -> nlist) ~ ("nprobe" -> nprobe) ~ ("t" -> r3(t.wall)) ~
+            ("straggler" -> r3(t.straggler)) ~ ("cells" -> cells) ~
+            ("max_cell" -> mx) ~ ("mean_cell" -> r3(mean))
         }
       }
-      spark.sparkContext.addSparkListener(listener)
-      def measure(name: String)(rowsOf: => Long): Unit = {
-        durations.clear()
-        val t0 = System.nanoTime()
-        val nRows = rowsOf
-        val wall = (System.nanoTime() - t0) / 1e9
-        val ds = { import scala.jdk.CollectionConverters._
-          durations.iterator().asScala.toArray.sorted }
-        val maxT = if (ds.nonEmpty) ds.last / 1e3 else 0.0
-        val medT = if (ds.nonEmpty) ds(ds.length / 2) / 1e3 else 0.0
-        println(f"SKEW $name%s: $wall%.1f s wall, $nRows rows, ${ds.length} tasks, max task $maxT%.1f s, median $medT%.2f s, max/wall ${maxT / wall}%.2f")
+      // PQ at the contract codebook on the same amplified corpus
+      val pq = withMeter(meter => meter.time()(noopForce(
+        graft.ops.ProductQuant.pqTopK(meter.spark, ampDir, m = 10, k = 5)))._1)
+      writeJson(p.out, ("mode" -> "ann_scaled_params") ~ ("copies" -> p.n) ~
+        ("n_vectors" -> p.n * 2000L) ~ // recorded, not load-bearing
+        ("configs" -> rows.toList) ~ ("pq_contract_t" -> r3(pq.wall)))
+    }
+  }
+
+  /** `semdedup <sfDir> <copies> <outJson>` — the scaled-parameter
+    * honesty pass on dd_semdedup, mirroring [[annScale]]: the
+    * oracle-pinned query runs nlist = 10, but SemDeDup's whole scaling
+    * argument is that the within-cluster quadratic stays bounded
+    * because nlist grows with the corpus (cells stay ~N/nlist sized).
+    * Amplifies embeddings `copies`× (id-shifted verbatim vectors — a
+    * duplicate-SATURATED corpus: every copy pair is cosine 1.0, the
+    * family's worst case) and measures the full cluster+prune at
+    * √N-scale cell counts, emitting wall, straggler fraction, cell
+    * balance, and the survivor count (which must stay ≈ the 1×
+    * survivor set: the 99 extra copies of every vector are dominated
+    * by their lowest-copy twin — within-cell recall of exact dups is
+    * total because identical vectors share a cell by construction). */
+  def semDedupScale(args: Array[String]): Unit = {
+    val p = parse(args, 100, defaultOut("semdedup"))
+    withAmplified(p.sfDir, p.n, Seq("embeddings")) { ampDir =>
+      def run(dir: String, nlist: Int): (Timing, Long) = withMeter { meter =>
+        meter.time()(graft.ops.Dedup.semDedupSurvivors(
+          table(meter.spark, dir, "embeddings"), nlist = nlist).count())
       }
-      try {
+      val (t1, surv1) = run(p.sfDir, graft.ops.Similarity.IvfNlist)
+      val cfgs = Seq(256, 1024).map { nlist =>
+        val (t, surv) = run(ampDir, nlist)
+        ("nlist" -> nlist) ~ ("tN" -> r3(t.wall)) ~ ("ratio" -> r3(ratio(t1.wall, t.wall))) ~
+          ("straggler" -> r3(t.straggler)) ~ ("survivors" -> surv)
+      }
+      writeJson(p.out, ("mode" -> "semdedup_scaled_params") ~ ("copies" -> p.n) ~
+        ("t1" -> r3(t1.wall)) ~ ("survivors_1x" -> surv1) ~ ("configs" -> cfgs.toList))
+    }
+  }
+
+  /** `joinskew <sfDir> <copies> <outJson>` — the adversarial-skew
+    * witness for the stream-stream-join batch twins: the events table
+    * is amplified `copies`× and ~20% of ALL rows are reassigned to ONE
+    * hot user (md5-bucket selection, so the plant is deterministic),
+    * then the purchase<-click interval join runs over it. user_id is
+    * the join key, so the hot user is one shuffle partition holding
+    * 20% of both sides AND a quadratic share of the output — exactly
+    * the shape AQE's skew-join split must break across tasks. The
+    * artifact records wall, the max-task/wall straggler fraction, and
+    * the hot user's share of the output. */
+  def joinSkew(args: Array[String]): Unit = {
+    val p = parse(args, 10, "SKEW_JOIN_r15.json")
+    val hotUser = 999999999L
+    withAmplified(p.sfDir, p.n, Seq("events")) { ampDir =>
+      withMeter { meter =>
+        import meter.spark.implicits._
+        // ~20% of rows -> the hot user; the rest keep their per-copy
+        // disjoint user spaces (joins land exactly as at 1x)
+        val ev = table(meter.spark, ampDir, "events").withColumn("user_id",
+          when(conv(substring(md5($"event_id".cast("string")), 1, 4), 16, 10)
+            .cast("int") % 100 < 20, lit(hotUser)).otherwise($"user_id"))
+        def measure(join: (DataFrame, DataFrame, String) => DataFrame) = {
+          val (t, agg) = meter.time()(join(
+              graft.streaming.Windows.purchaseSide(ev),
+              graft.streaming.Windows.clickSide(ev), "24 hours")
+            .agg(count(lit(1)), sum(when($"user_id" === hotUser, 1L).otherwise(0L)))
+            .head())
+          (t, agg.getLong(0), agg.getLong(1))
+        }
+        val (tp, rp, hp) = measure(graft.streaming.Windows.purchaseClickJoin(_, _, _))
+        val (tb, rb, hb) = measure(graft.streaming.Windows.purchaseClickJoinBucketed(_, _, _))
+        require(rp == rb && hp == hb,
+          s"bucketed rewrite changed the output: plain ($rp, $hp) vs bucketed ($rb, $hb)")
+        writeJson(p.out, ("mode" -> "join_hot_user") ~ ("copies" -> p.n) ~
+          ("hot_frac" -> 0.2) ~ ("rows" -> rp) ~ ("hot_rows" -> hp) ~
+          ("plain" -> (("t" -> r3(tp.wall)) ~ ("straggler" -> r3(tp.straggler)))) ~
+          ("bucketed" -> (("t" -> r3(tb.wall)) ~ ("straggler" -> r3(tb.straggler)))))
+      }
+    }
+  }
+
+  /** `classifylife <sfDir> <copies> <outJson>` — the 100× pass on the
+    * NB classifier's OPERATIONAL closure (the round-17 stored/add/
+    * takedown + hashed-feature work): on the 1× and the `copies`×
+    * (verbatim-copy) corpus, measure the lifecycle costs and check
+    * the claims that justify them at 100 TB:
+    *
+    *  - build + store: the one-time cost (grows with the corpus —
+    *    that's fine, it is paid once);
+    *  - hashed build: the bucket-bounded artifact — the model's key
+    *    count must stay ≤ HashedFeatureBuckets at BOTH scales
+    *    (require()d), the property that makes the serving broadcast
+    *    safe at any corpus size;
+    *  - add: folding a FIXED 30-doc batch into the stored count
+    *    frames (union + group-sum + save). The stored frame is
+    *    VOCABULARY-sized, not corpus-sized — verbatim copies keep the
+    *    vocabulary constant (require()d equal across scales) — so the
+    *    edit cost must stay roughly flat while the corpus grows 100×;
+    *  - takedown: subtracting FIXED tombstones (docs 100-199) from
+    *    the live frames — same flat-cost argument, and the edited
+    *    model must be EXACTLY the retrain on (corpus + batch −
+    *    tombstones), field-for-field and count-for-count (require()d
+    *    at both scales: the additivity proof, executed);
+    *  - retrain: the full-rebuild baseline the edits avoid —
+    *    `edit_vs_retrain_Nx` is the measured win.
+    */
+  def classifyLifeScale(args: Array[String]): Unit = {
+    val p = parse(args, 100, defaultOut("classifylife"))
+    def modelEq(a: graft.streaming.NbModel, b: graft.streaming.NbModel): Boolean =
+      a.classes.sameElements(b.classes) &&
+        a.priorBits.sameElements(b.priorBits) &&
+        a.dd.sameElements(b.dd) &&
+        a.counts.keySet == b.counts.keySet &&
+        a.counts.forall { case (w, arr) => arr.sameElements(b.counts(w)) }
+
+    val seq = new java.util.concurrent.atomic.AtomicLong()
+    def run(dir: String): (Map[String, Double], Long, Long) = withMeter { meter =>
+      val spark = meter.spark
+      import spark.implicits._
+      import graft.streaming.ClassifyServe
+      import graft.ops.IndexStore
+      def docs = table(spark, dir, "documents")
+      // the phases edit stored state in sequence: timed once, unwarmed
+      def time[T](body: => T): (Timing, T) = meter.time(warm = false)(body)
+      val root = IndexStore.scratchRoot(spark, "nblife", seq.incrementAndGet())
+      val (tBuild, vocab) = time {
+        val (cls, cnt) = ClassifyServe.nbCountFrames(docs, $"text", $"lang")
+        IndexStore.save(root, "nb_classes" -> cls, "nb_counts" -> cnt)
+        ClassifyServe.nbModelFromFrames(
+          IndexStore.load(spark, root, "nb_classes"),
+          IndexStore.load(spark, root, "nb_counts")).counts.size.toLong
+      }
+      val (tHash, hkeys) = time {
+        val (clsH, cntH) = ClassifyServe.nbCountFrames(docs, $"text", $"lang",
+          featOf = graft.ops.Classify.hashedFeat)
+        ClassifyServe.nbModelFromFrames(clsH, cntH,
+          Some(graft.ops.Classify.HashedFeatureBuckets)).counts.size.toLong
+      }
+      require(hkeys <= graft.ops.Classify.HashedFeatureBuckets,
+        s"hashed model $hkeys keys > bucket bound")
+      def batch = docs.filter($"doc_id" < 30)
+        .select(($"doc_id" + 2000000L).as("doc_id"), $"lang",
+          substring($"text", 1, 40).as("text"))
+      val (tAdd, _) = time {
+        val (clsB, cntB) = ClassifyServe.nbCountFrames(batch, $"text", $"lang")
+        val clsLive = IndexStore.load(spark, root, "nb_classes")
+          .unionByName(clsB)
+          .groupBy($"lab").agg(
+            sum($"n_docs_s").as("n_docs_s"), sum($"n_toks_s").as("n_toks_s"))
+        val cntLive = IndexStore.load(spark, root, "nb_counts")
+          .unionByName(cntB)
+          .groupBy($"w", $"lab").agg(sum($"cws").as("cws"))
+        IndexStore.save(root, "nb_classes" -> clsLive, "nb_counts" -> cntLive)
+      }
+      val (tTake, _) = time {
+        val (clsT, cntT) = ClassifyServe.nbCountFrames(
+          docs.filter($"doc_id" >= 100 && $"doc_id" < 200), $"text", $"lang")
+        val clsLive = IndexStore.load(spark, root, "nb_classes")
+          .join(clsT.select($"lab", $"n_docs_s".as("__d"), $"n_toks_s".as("__t")),
+            Seq("lab"), "left")
+          .select($"lab",
+            ($"n_docs_s" - coalesce($"__d", lit(0L))).as("n_docs_s"),
+            ($"n_toks_s" - coalesce($"__t", lit(0L))).as("n_toks_s"))
+          .filter($"n_docs_s" > 0)
+        val cntLive = IndexStore.load(spark, root, "nb_counts")
+          .join(cntT.select($"w", $"lab", $"cws".as("__c")), Seq("w", "lab"), "left")
+          .select($"w", $"lab", ($"cws" - coalesce($"__c", lit(0L))).as("cws"))
+          .filter($"cws" > 0)
+        IndexStore.save(root, "nb_classes" -> clsLive, "nb_counts" -> cntLive)
+      }
+      val (tRetrain, ok) = time {
+        val base = docs
+          .filter(!($"doc_id" >= 100 && $"doc_id" < 200))
+          .select($"doc_id", $"lang", $"text")
+          .unionByName(batch.select($"doc_id", $"lang", $"text"))
+        val mRe = ClassifyServe.buildNbModel(base, $"doc_id", $"text", $"lang")
+        val mEd = ClassifyServe.nbModelFromFrames(
+          IndexStore.load(spark, root, "nb_classes"),
+          IndexStore.load(spark, root, "nb_counts"))
+        modelEq(mEd, mRe)
+      }
+      require(ok, "edited frames != retrain on corpus + batch - tombstones")
+      (Map("build" -> tBuild, "hash_build" -> tHash, "add" -> tAdd,
+        "takedown" -> tTake, "retrain" -> tRetrain).map(kv => kv._1 -> kv._2.wall),
+        vocab, hkeys)
+    }
+
+    withAmplified(p.sfDir, p.n, Seq("documents")) { ampDir =>
+      val (m1, v1, h1) = run(p.sfDir)
+      val (mN, vN, hN) = run(ampDir)
+      require(v1 == vN,
+        s"vocabulary changed under verbatim copies: $v1 -> $vN")
+      val phases = Seq("build", "hash_build", "add", "takedown", "retrain")
+        .map(k => k -> scaled(m1(k), mN(k)))
+      writeJson(p.out, ("mode" -> "classify_lifecycle") ~ ("copies" -> p.n) ~
+        JObject(phases.toList) ~
+        ("vocab" -> v1) ~ ("hashed_keys_1x" -> h1) ~ ("hashed_keys_Nx" -> hN) ~
+        ("edit_vs_retrain_Nx" -> r3(mN("retrain") / math.max(mN("add") + mN("takedown"), 1e-9))) ~
+        ("model_surgery_exact" -> true) ~
+        ("note" -> "the structural claims are the scale story here: count frames stay vocabulary-sized (vocab constant under verbatim copies, require()d), the hashed model stays bucket-bounded at both scales, and edited frames equal the retrain EXACTLY at both scales; at this fixture's corpus/vocabulary size every phase is scheduling-overhead-dominated, so ~1.0 ratios under 100x data mean no phase's cost grew with the corpus -- for add/takedown that flatness IS the claim (they scan only the delta + vocabulary-sized frames), while at production scale build/retrain would grow linearly and the edit forms would not"))
+    }
+  }
+
+  // ---- stress runs -------------------------------------------------
+
+  /** Hot-band skew stress for the banded dedup joins: plants a HOT
+    * BAND of `variants` distinct near-identical documents (~20% of the
+    * corpus) whose shingle sets differ by one token, so every LSH band
+    * hashes them into the SAME bucket, over 2 amplified background
+    * copies. The candidate join then has one bucket holding ~20% of
+    * all postings — the adversarial-skew case for the banded
+    * equi-joins. Prints wall time plus the max/median TASK time of
+    * each run: AQE's skew-join split (`spark.sql.adaptive.skewJoin`,
+    * on by default) splits the oversized sort-merge partition across
+    * tasks, so the hot bucket must NOT serialize into one straggler
+    * task. */
+  def hotBand(args: Array[String]): Unit = {
+    val p = parse(args, 2500)
+    val variants = p.n
+    // background: 2 id-shifted copies (duplicate-saturated baseline)
+    withAmplified(p.sfDir, 2, Seq("documents", "embeddings")) { dir =>
+      withMeter { meter =>
+        val spark = meter.spark
+        import spark.implicits._
+        // the hot rows join the amplified table in its own schema
+        def append(rows: DataFrame, t: String): Unit = {
+          val path = s"$dir/$t.parquet"
+          rows.select(spark.read.parquet(path).schema.fields.toSeq
+              .map(f => col(f.name).cast(f.dataType)): _*)
+            .write.mode("append").parquet(path)
+        }
+        val base = table(spark, p.sfDir, "documents")
+        val n = base.count()
+        // hot band: `variants` DISTINCT texts sharing ~all shingles — one
+        // appended unique token each, so exact-content collapse can NOT
+        // absorb them (all contents distinct) and every minhash band
+        // funnels them into the same bucket
+        val seedText = base.orderBy($"doc_id").select($"text").head().getString(0)
+        append(spark.range(variants).select(
+          ($"id" + lit(500000000L)).as("doc_id"),
+          concat(lit(seedText), lit(" varianttok"), $"id").as("text"),
+          lit("en").as("lang"), lit("hot").as("source"),
+          (length(lit(seedText)) + lit(12)).as("n_chars")), "documents")
+        // embedding twin of the text hot band: `variants` DISTINCT
+        // vectors around one seed, each perturbed on coordinate 0 by a
+        // different tiny step — exact-vector collapse cannot absorb them
+        // (all distinct), yet the perturbation is far too small to flip
+        // a hyperplane sign, so every LSH band hashes them into the SAME
+        // bucket: the adversarial case for dd_embed_cos / s_ann_lsh's
+        // banded blocking
+        val emb = spark.read.parquet(s"${p.sfDir}/embeddings.parquet")
+        val nE = emb.count()
+        val seedVec = emb.orderBy($"vec_id").select($"embedding")
+          .head().getSeq[Float](0)
+        append(spark.range(variants).select(
+          ($"id" + lit(500000000L)).as("vec_id"),
+          array((lit(seedVec.head) + ($"id" + 1L).cast("float") * lit(1e-6f))
+              .cast("float") +: seedVec.tail.map(f => lit(f)): _*).as("embedding"),
+          lit(999).as("label")), "embeddings")
+        val total = n * 2 + variants
+        println(s"SKEW corpus: $total docs, hot band = $variants distinct near-identical texts (${100 * variants / total}%)")
+        println(s"SKEW embeddings: ${nE * 2 + variants} vectors, hot bucket = $variants distinct near-identical vectors")
+
+        // task-level skew metrics: if the hot bucket serialized into one
+        // task, max task time ≈ whole-stage time; AQE's skew-join split
+        // (adaptive.skewJoin, default on) plus the pair-bound verify keep
+        // max/median bounded instead
+        def measure(name: String)(rowsOf: => Long): Unit = {
+          val (t, nRows) = meter.time(warm = false)(rowsOf)
+          println(f"SKEW $name%s: ${t.wall}%.1f s wall, $nRows rows, ${t.tasks} tasks, max task ${t.maxTask}%.1f s, median ${t.medTask}%.2f s, max/wall ${t.straggler}%.2f")
+        }
+        def query(q: String): Unit =
+          measure(q)(graft.SparkEntry.queries(q)(spark, dir).count())
         // The two online indexes (w_neardup_pairs, w_embed_neardup)
         // are EXPECTED to show max/wall near 1 here: a hot band is one
         // flatMapGroupsWithState group, and stateful groups cannot be
@@ -1462,9 +929,8 @@ ${entries.mkString(",\n")}
         for (q <- Seq("dd_minhash_lsh", "dd_apply_lsh", "dd_simhash",
             "dd_embed_cos", "s_ann_lsh", "dd_decontaminate",
             "dd_embed_decontaminate", "dd_dup_ngrams", "dd_dup_spans",
-            "dd_containment", "w_neardup_pairs", "w_embed_neardup")) {
-          measure(q)(graft.SparkEntry.queries(q)(spark, dir).count())
-        }
+            "dd_containment", "w_neardup_pairs", "w_embed_neardup"))
+          query(q)
         // Incremental-admission worst case: a HOT-BAND BATCH arriving
         // against the hot-band corpus. Every batch doc/vector is a
         // fresh distinct variant of the SAME seed, so all of its band
@@ -1521,15 +987,8 @@ ${entries.mkString(",\n")}
         // the quantized-index compact queries over the hot-bucket
         // corpus: tombstoned cells fold into the artifact while the
         // hot bucket concentrates assignment/probe keys
-        measure("s_ann_ivf_compact")(
-          graft.SparkEntry.queries("s_ann_ivf_compact")(spark, dir).count())
-        measure("s_ann_ivfpq_compact")(
-          graft.SparkEntry.queries("s_ann_ivfpq_compact")(spark, dir).count())
-      } finally spark.sparkContext.removeSparkListener(listener)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      spark.stop()
+        Seq("s_ann_ivf_compact", "s_ann_ivfpq_compact").foreach(query)
+      }
     }
   }
 
@@ -1538,80 +997,54 @@ ${entries.mkString(",\n")}
     * a duplicate-SATURATED corpus — every document gains C(copies, 2)
     * true near-dup partners, the worst case for pairwise stages (df per
     * gram multiplies by `copies`, so a quadratic intermediate would blow
-    * up copies² ≈ 400x while the corpus only grows 20x). */
+    * up copies² ≈ 400x while the corpus only grows 20x). Embeddings are
+    * amplified too: every vector has copies-1 exact twins, the worst
+    * case for the banded-LSH blocking (twins collide in EVERY band). */
   def dedupSaturation(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(20)
-    val spark = buildSession()
-    import spark.implicits._
-
-    val base = table(spark, sfDir, "documents")
-    val n = base.count()
-    val big = base
-      .crossJoin(spark.range(copies).select($"id".as("__copy")))
-      .select(
-        ($"doc_id" + $"__copy" * lit(1000000L)).as("doc_id"),
-        $"text", $"lang", $"source", $"n_chars")
-    val bigDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
-    big.write.parquet(s"$bigDir/documents.parquet")
-    // duplicate-saturated embeddings too: every vector has copies-1
-    // exact twins, the worst case for the banded-LSH blocking (twins
-    // collide in EVERY band)
-    table(spark, sfDir, "embeddings")
-      .crossJoin(spark.range(copies).select($"id".as("__copy")))
-      .select(
-        ($"vec_id" + $"__copy" * lit(1000000L)).as("vec_id"),
-        $"embedding", $"label")
-      .write.parquet(s"$bigDir/embeddings.parquet")
-    println(s"SMOKE corpus: ${n * copies} docs ($copies copies of $n)")
-
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"SMOKE $name: ${(System.nanoTime() - t0) / 1e9}%.1f s ($rows rows)")
-    }
-
-    try {
-      time("dd_exact")(graft.SparkEntry.queries("dd_exact")(spark, bigDir).count())
-      // UNCOLLAPSED prefix-filter probe: candidate volume is pair-bound
-      // (stop-grams fall out of prefixes — not sum-of-df^2-bound), but
-      // on this saturated corpus "pair-bound" is still quadratic in the
-      // duplication factor (~49M candidates for ~1.05M true pairs)
-      time("dd_apply_prefix_candidates") {
-        val docs = table(spark, bigDir, "documents")
-        graft.ops.Dedup.prefixCandidates(docs.select($"doc_id", $"text"))._2.count()
+    val p = parse(args, 20)
+    withAmplified(p.sfDir, p.n, Seq("documents", "embeddings")) { bigDir =>
+      withMeter { meter =>
+        val spark = meter.spark
+        import spark.implicits._
+        val n = table(spark, p.sfDir, "documents").count()
+        println(s"SMOKE corpus: ${n * p.n} docs (${p.n} copies of $n)")
+        def time(name: String)(f: => Long): Unit = {
+          val (t, rows) = meter.time(warm = false)(f)
+          println(f"SMOKE $name: ${t.wall}%.1f s ($rows rows)")
+        }
+        def query(q: String): Unit =
+          time(q)(graft.SparkEntry.queries(q)(spark, bigDir).count())
+        query("dd_exact")
+        // UNCOLLAPSED prefix-filter probe: candidate volume is pair-bound
+        // (stop-grams fall out of prefixes — not sum-of-df^2-bound), but
+        // on this saturated corpus "pair-bound" is still quadratic in the
+        // duplication factor (~49M candidates for ~1.05M true pairs)
+        time("dd_apply_prefix_candidates") {
+          val docs = table(spark, bigDir, "documents")
+          graft.ops.Dedup.prefixCandidates(docs.select($"doc_id", $"text"))._2.count()
+        }
+        // the full operator collapses exact-content groups to their
+        // minimal doc_id BEFORE pairing, so the pairwise stage sees the
+        // 5k unique contents, not the 100k docs: 342s -> ~6s here with a
+        // provably identical survivor set
+        query("dd_apply")
+        // ngram candidate volume under saturation, uncollapsed probe: the
+        // banded prefix filter at t=0.2 keeps this pair-bound (prefix
+        // collisions within adjacent bands), not Σ df²-bound — the
+        // pre-round-4 full-postings join would square the gram df here
+        time("dd_ngram_prefix_candidates") {
+          val docs = table(spark, bigDir, "documents")
+          graft.ops.Dedup.prefixCandidates(
+            docs.select($"doc_id", $"text",
+              floor($"n_chars" / lit(50)).cast("int").as("band")),
+            tn = 1, td = 5, hashKind = "xx64", banded = true)._2.count()
+        }
+        Seq("dd_minhash_lsh", "dd_ngram_jaccard", "dd_apply_lsh", "dd_simhash").foreach(query)
+        // banded hyperplane-LSH blocking under total vector saturation;
+        // output is the inherent quadratic (every twin pair is a true
+        // cosine-1 pair), candidates stay band-bounded
+        Seq("dd_embed_cos", "s_ann_lsh", "t_vocab", "t_fingerprint").foreach(query)
       }
-      // the full operator collapses exact-content groups to their
-      // minimal doc_id BEFORE pairing, so the pairwise stage sees the
-      // 5k unique contents, not the 100k docs: 342s -> ~6s here with a
-      // provably identical survivor set
-      time("dd_apply")(graft.SparkEntry.queries("dd_apply")(spark, bigDir).count())
-      // ngram candidate volume under saturation, uncollapsed probe: the
-      // banded prefix filter at t=0.2 keeps this pair-bound (prefix
-      // collisions within adjacent bands), not Σ df²-bound — the
-      // pre-round-4 full-postings join would square the gram df here
-      time("dd_ngram_prefix_candidates") {
-        val docs = table(spark, bigDir, "documents")
-        graft.ops.Dedup.prefixCandidates(
-          docs.select($"doc_id", $"text",
-            floor($"n_chars" / lit(50)).cast("int").as("band")),
-          tn = 1, td = 5, hashKind = "xx64", banded = true)._2.count()
-      }
-      time("dd_minhash_lsh")(graft.SparkEntry.queries("dd_minhash_lsh")(spark, bigDir).count())
-      time("dd_ngram_jaccard")(graft.SparkEntry.queries("dd_ngram_jaccard")(spark, bigDir).count())
-      time("dd_apply_lsh")(graft.SparkEntry.queries("dd_apply_lsh")(spark, bigDir).count())
-      time("dd_simhash")(graft.SparkEntry.queries("dd_simhash")(spark, bigDir).count())
-      // banded hyperplane-LSH blocking under total vector saturation;
-      // output is the inherent quadratic (every twin pair is a true
-      // cosine-1 pair), candidates stay band-bounded
-      time("dd_embed_cos")(graft.SparkEntry.queries("dd_embed_cos")(spark, bigDir).count())
-      time("s_ann_lsh")(graft.SparkEntry.queries("s_ann_lsh")(spark, bigDir).count())
-      time("t_vocab")(graft.SparkEntry.queries("t_vocab")(spark, bigDir).count())
-      time("t_fingerprint")(graft.SparkEntry.queries("t_fingerprint")(spark, bigDir).count())
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(bigDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      spark.stop()
     }
   }
 }

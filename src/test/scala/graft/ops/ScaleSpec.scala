@@ -92,6 +92,44 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
       3 * base("documents").count())
     assert(amp("documents").select($"text").distinct().count() ==
       base("documents").select($"text").distinct().count())
+
+    // a table subset writes only the requested tables
+    val docsOnly = java.nio.file.Files.createTempDirectory("graft_ampspec").toString
+    graft.tools.ScaleSmoke.amplifyDatabase(spark, sf, docsOnly, copies = 2,
+      tables = Seq("documents"))
+    assert(new java.io.File(docsOnly).list().toSeq == Seq("documents.parquet"))
+    assert(spark.read.parquet(s"$docsOnly/documents.parquet").count() ==
+      2 * base("documents").count())
+  }
+
+  test("ScaleSmoke invariants accept each checked query's output at 1x and 2x") {
+    val sf = "/root/testdata/sf0.001"
+    val amp = java.nio.file.Files.createTempDirectory("graft_invspec").toString
+    graft.tools.ScaleSmoke.amplifyDatabase(spark, sf, amp, copies = 2,
+      tables = Seq("documents"))
+    graft.tools.ScaleSmoke.invariants.toSeq.sortBy(_._1).foreach { case (name, inv) =>
+      // building a query again releases its prior run's leases, so
+      // each output is fully checked before the next is built
+      def checked(dir: String): Long = {
+        val out = graft.SparkEntry.queries(name)(spark, dir)
+        inv.each(out)
+        out.count()
+      }
+      val rows1 = checked(sf)
+      val rows2 = checked(amp)
+      inv.rowsNx.foreach(rule => assert(rows2 == rule(rows1, 2), s"$name rows at 2x"))
+    }
+  }
+
+  test("ScaleSmoke t_dsir invariant rejects one flipped selected flag") {
+    import spark.implicits._
+    val out = graft.SparkEntry.queries("t_dsir")(spark, "/root/testdata/sf0.001")
+    val check = graft.tools.ScaleSmoke.invariants("t_dsir").each
+    assert(check(out) == Seq("selected" -> out.filter($"selected").count()))
+    val flip = out.filter($"selected").select($"doc_id").head().getLong(0)
+    val flipped = out.withColumn("selected",
+      when($"doc_id" === flip, !$"selected").otherwise($"selected"))
+    intercept[IllegalArgumentException](check(flipped))
   }
 
   test("zValue: exact interleave, bucket rectangles, 2-D layout beats 1-D sort") {
